@@ -55,7 +55,7 @@ def test_compact_epoch_warehouse(spark, tmp_path, capsys):
 
     # routed point lookup works against the compacted warehouse
     target = want[len(want) // 2].conv_id
-    pids = scan._manifest_conv_partitions(out, target)
+    pids = scan.Router(out).pids([target])
     assert pids is not None and len(pids) == 1
     hit = scan.fetch_conversation(spark, out, target)
     assert len(hit) == sum(1 for r in want if r.conv_id == target) > 0

@@ -347,13 +347,13 @@ def test_bulk_delete_via_ids_file_and_anti_join(spark, wh, tmp_path,
 
     monkeypatch.setattr(rewrite_mod, "_ISIN_MAX_IDS", 0)
     route_calls: list[int] = []
-    real_route_many = scan_mod._route_many
+    real_pids = scan_mod.Router.pids
 
-    def counting_route_many(warehouse, conv_ids):
+    def counting_pids(self, conv_ids, write_turns=None):
         route_calls.append(len(list(conv_ids)))
-        return real_route_many(warehouse, conv_ids)
+        return real_pids(self, conv_ids, write_turns)
 
-    monkeypatch.setattr(scan_mod, "_route_many", counting_route_many)
+    monkeypatch.setattr(scan_mod.Router, "pids", counting_pids)
 
     full = read_warehouse(spark, wh)
     cids = [r[0] for r in
@@ -369,7 +369,7 @@ def test_bulk_delete_via_ids_file_and_anti_join(spark, wh, tmp_path,
     ])
     assert code == 0 and rec["status"] == "ok"
     assert rec["rows_deleted"] == n_del
-    # the whole batch routed in ONE _route_many call (no per-id loop)
+    # the whole batch routed in ONE Router.pids call (no per-id loop)
     assert route_calls == [4]
 
     after = read_warehouse(spark, wh)
@@ -384,18 +384,16 @@ def test_bulk_delete_via_ids_file_and_anti_join(spark, wh, tmp_path,
 
 def test_route_many_matches_per_id_routes(spark, wh):
     """Batch routing returns exactly the union of single-id routes."""
-    from vcf2df_spark.scan import _route, _route_many
+    from vcf2df_spark.scan import Router
 
     full = read_warehouse(spark, wh)
     cids = [r[0] for r in
             full.select("conv_id").distinct().orderBy("conv_id").take(5)]
+    router = Router(wh)
     want: set = set()
-    shard = None
     for c in cids:
-        p, shard = _route(wh, c)
-        want.update(p)
-    got, got_shard = _route_many(wh, cids)
-    assert sorted(want) == got and shard == got_shard
+        want.update(router.pids([c]))
+    assert sorted(want) == router.pids(cids)
 
 
 def test_delete_mega_conversation_skew(spark, tmp_path):
@@ -530,3 +528,32 @@ def test_delete_restores_overwrite_mode(spark, wh):
         == "static"
     )
     spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+
+
+def test_no_match_delete_is_noop_before_any_spark_job(spark, wh):
+    """A delete none of whose ids any routed chunk holds returns noop from
+    the lookup's driver-side locate step: no staged write, no Spark job,
+    the warehouse untouched."""
+    import os
+
+    from vcf2df_spark.rewrite import routed_rewrite
+
+    def snapshot():
+        return sorted(
+            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _dirs, files in os.walk(wh) for f in files
+        )
+
+    before = snapshot()
+    sc = spark.sparkContext
+    sc.setJobGroup("noop-delete", "must stay empty")
+    try:
+        out = routed_rewrite(spark, wh, ["conv-not-there"], "d1", "test")
+        jobs = list(sc.statusTracker().getJobIdsForGroup("noop-delete"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert out["status"] == "noop" and out["rows_deleted"] == 0
+    assert out["partitions_routed"]
+    assert jobs == []
+    assert snapshot() == before

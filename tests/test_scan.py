@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from vcf2df_spark import fixtures, scan
@@ -212,37 +213,284 @@ def test_spark_xxhash64_parity(spark):
         assert pkey_for(c, s, 16) == r.p
 
 
+def _job_warehouse(spark, path, src, num_partitions=8, chunk_rows=256):
+    """Job-shaped warehouse: hive partition_id dirs + manifests with the
+    hash-routing metadata (what jobs/encode.py writes)."""
+    from vcf2df_spark import manifest
+
+    blocks = encode_transcripts(
+        spark.createDataFrame(src), num_partitions=num_partitions,
+        chunk_rows=chunk_rows,
+    ).cache()
+    blocks.write.partitionBy("partition_id").parquet(f"{path}/blocks")
+    manifest.build_manifests(
+        blocks, "t", "src", num_partitions=num_partitions
+    ).write.parquet(f"{path}/manifests")
+    blocks.unpersist()
+    return path
+
+
+def _no_spark_jobs(spark, fn):
+    """fn()'s result, asserting it launched no Spark job (the status
+    tracker's job ids for a dedicated job group stay empty)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"no-spark-job-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "must stay empty")
+    try:
+        out = fn()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out
+
+
 def test_fetch_conversation_hash_routed_partition_pruning(spark, tmp_path):
     """Job-shaped warehouse (hive dirs + manifests): the lookup COMPUTES
     its partition from the manifests' routing metadata (num_partitions +
-    turn_max) — one dir per 256-turn split — and launches no Spark job."""
+    each partition's turn range) — one dir per split that the partition's
+    turn range allows — and launches no Spark job."""
     from vcf2df_spark import manifest
 
     src = fixtures.transcripts_small(n_convs=400)
-    blocks = encode_transcripts(
-        spark.createDataFrame(src), num_partitions=8, chunk_rows=256
-    ).cache()
-    wh = str(tmp_path / "mwh")
-    blocks.write.partitionBy("partition_id").parquet(f"{wh}/blocks")
-    manifest.build_manifests(
-        blocks, "t", "src", num_partitions=8
-    ).write.parquet(f"{wh}/manifests")
-    blocks.unpersist()
+    wh = _job_warehouse(spark, str(tmp_path / "mwh"), src)
 
     target = "conv-00000123"
-    pids = scan._manifest_conv_partitions(wh, target)
+    pids = scan.Router(wh).pids([target])
     # fixture convs are < 256 turns -> exactly one split -> one partition
     assert pids is not None and len(pids) == 1
-    got = scan.fetch_conversation(spark, wh, target)
+    # the sanity probe sees a job when one runs
+    try:
+        _no_spark_jobs(spark, lambda: spark.range(3).count())
+        raised = False
+    except AssertionError:
+        raised = True
+    assert raised
+    got = _no_spark_jobs(
+        spark, lambda: scan.fetch_conversation(spark, wh, target)
+    )
     want = src[src.conv_id == target].sort_values("turn_idx")
     assert len(got) == len(want) > 0
     assert (got["text"].to_numpy() == want["text"].to_numpy()).all()
     # manifests without routing metadata fall back to conv ranges (all 8
     # under hash layout — conservative, never wrong)
+    blocks = spark.read.parquet(f"{wh}/blocks")
     manifest.build_manifests(blocks, "t2", "src").write.mode("overwrite").parquet(
         f"{wh}/manifests"
     )
-    pids_range = scan._manifest_conv_partitions(wh, target)
+    pids_range = scan.Router(wh).pids([target])
     assert pids_range == list(range(8))
     # warehouses without manifests (bench/test layout) degrade gracefully
-    assert scan._manifest_conv_partitions(str(tmp_path / "nope"), target) is None
+    assert scan.Router(str(tmp_path / "nope")).pids([target]) is None
+
+
+def test_split_of_truncates_like_the_encoder(spark):
+    """split_of must match the encoder's (turn_idx / 256).cast("int"),
+    which truncates toward zero — Python's // floors."""
+    from vcf2df_spark.sparkhash import split_of
+
+    turns = [-100000, -600, -513, -512, -511, -300, -257, -256, -255, -10,
+             -1, 0, 1, 255, 256, 511, 512, 100000]
+    got = spark.createDataFrame([(t,) for t in turns], "t int").select(
+        (F.col("t") / F.lit(256)).cast("int").alias("s")
+    ).collect()
+    assert [split_of(t) for t in turns] == [r.s for r in got]
+
+
+MEGA = "conv-00000000"  # transcripts_skew puts the long conversation first
+
+
+@pytest.fixture(scope="module")
+def mega_wh(spark, tmp_path_factory):
+    """16-partition job-shaped warehouse whose first conversation runs
+    1,500 turns (six 256-turn splits); every other one is < 256."""
+    src = fixtures.transcripts_skew(n_convs=300, mega_len=1500)
+    wh = _job_warehouse(
+        spark, str(tmp_path_factory.mktemp("mega") / "wh"), src,
+        num_partitions=16,
+    )
+    # ground truth: the partition Spark's partitioner gave each row
+    from vcf2df_spark.encode import with_partition_key
+
+    keyed = with_partition_key(
+        spark.createDataFrame(src[["conv_id", "turn_idx"]]), 16
+    ).toPandas()
+    return src, wh, keyed
+
+
+def _write_manifests(wh, table):
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(f"{wh}/manifests")
+    os.makedirs(f"{wh}/manifests")
+    pq.write_table(table, f"{wh}/manifests/part-0.parquet")
+
+
+def test_router_prunes_splits_by_partition_turn_range(spark, mega_wh):
+    """A small conversation in a warehouse holding a 1,500-turn one routes
+    only to the partitions whose own turn range allows each split; every
+    split of the mega conversation still routes and fetches exactly."""
+    from vcf2df_spark.sparkhash import pkey_for, split_of
+
+    src, wh, keyed = mega_wh
+    keyed = keyed.assign(split=[split_of(t) for t in keyed["turn_idx"]])
+    span = keyed.groupby("_pkey")["split"].agg(["min", "max"])
+    n_splits = split_of(int(src["turn_idx"].max())) + 1
+    assert n_splits == 6
+
+    router = scan.Router(wh)
+    pruned_any = False
+    for cid in sorted(set(src["conv_id"]) - {MEGA})[:40]:
+        cands = {(pkey_for(cid, s, 16), s) for s in range(n_splits)}
+        want = sorted({
+            p for p, s in cands
+            if p not in span.index
+            or span.loc[p, "min"] <= s <= span.loc[p, "max"]
+        })
+        got = router.pids([cid])
+        assert got == want, cid
+        # the conversation's own partition is always in the route
+        own = set(keyed.loc[keyed.conv_id == cid, "_pkey"])
+        assert own <= set(got)
+        pruned_any |= len(got) < len({p for p, _ in cands})
+    assert pruned_any
+
+    # the mega conversation: every split's partition routes, all rows fetch
+    own = set(keyed.loc[keyed.conv_id == MEGA, "_pkey"])
+    assert len(own) > 1 and own <= set(router.pids([MEGA]))
+    got = scan.fetch_conversation(spark, wh, MEGA)
+    want = src[src.conv_id == MEGA].sort_values("turn_idx")
+    assert len(got) == len(want) == 1500
+    assert list(got["turn_idx"]) == list(want["turn_idx"])
+    assert list(got["text"]) == list(want["text"])
+
+
+def test_router_conservative_on_legacy_and_missing_manifests(
+    spark, mega_wh, tmp_path
+):
+    """Legacy manifests (no turn_min) route exactly as before the turn
+    range existed — every split 0..split(turn_max); a partition with no
+    committed manifest row, or null turn stats, is never pruned."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    from vcf2df_spark.sparkhash import pkey_for, split_of
+
+    import shutil
+
+    src, wh, _keyed = mega_wh
+    wh = shutil.copytree(wh, str(tmp_path / "wh"))
+    m = pads.dataset(f"{wh}/manifests", format="parquet").to_table()
+    n_splits = split_of(int(src["turn_idx"].max())) + 1
+    small = sorted(set(src["conv_id"]) - {MEGA})[:40]
+
+    def unpruned(cid):
+        return sorted({pkey_for(cid, s, 16) for s in range(n_splits)})
+
+    # legacy: the manifests predate turn_min
+    _write_manifests(wh, m.drop_columns(["turn_min"]))
+    router = scan.Router(wh)
+    for cid in small:
+        assert router.pids([cid]) == unpruned(cid)
+    got = scan.fetch_conversation(spark, wh, small[0])
+    assert len(got) == int((src.conv_id == small[0]).sum())
+
+    # a small conversation with a pruned-away candidate partition that
+    # holds only split 0 (so dropping its row keeps the global range)
+    _write_manifests(wh, m)
+    router = scan.Router(wh)
+    low = set(m.filter(pc.less(m["turn_max"], 256))["partition_id"].to_pylist())
+    cid, victim = next(
+        (c, p) for c in small
+        for p in sorted(set(unpruned(c)) - set(router.pids([c])))
+        if p in low
+    )
+    # that partition's manifest row missing -> kept
+    _write_manifests(
+        wh, m.filter(pc.not_equal(m["partition_id"], pa.scalar(victim, pa.int32())))
+    )
+    assert victim in scan.Router(wh).pids([cid])
+    # null turn stats on that row -> kept
+    is_victim = pc.equal(m["partition_id"], pa.scalar(victim, pa.int32()))
+    idx = m.schema.get_field_index("turn_min")
+    _write_manifests(wh, m.set_column(
+        idx, "turn_min",
+        pc.if_else(is_victim, pa.scalar(None, pa.int64()), m["turn_min"]),
+    ))
+    assert victim in scan.Router(wh).pids([cid])
+
+
+def test_negative_turns_route_through_lookup_sql_and_rewrite(spark, tmp_path):
+    """Regression: turns <= -256 hash to splits -1, -2, ...; a router
+    walking only splits 0.. lost them silently from the lookup, the point
+    SQL and the routed rewrite."""
+    from vcf2df_spark.datasource import read_warehouse, scan_warehouse
+    from vcf2df_spark.encode import normalize_input
+    from vcf2df_spark.rewrite import routed_rewrite
+
+    base = fixtures.transcripts_small(n_convs=60)
+    neg = base[base.conv_id == base.conv_id.iloc[0]].head(6).copy()
+    neg["conv_id"] = "conv-neg"
+    neg["turn_idx"] = pd.array([-600, -300, -10, 0, 1, 2], dtype="int32")
+    src = pd.concat([base, neg], ignore_index=True)
+    wh = _job_warehouse(spark, str(tmp_path / "nwh"), src)
+
+    def turns_everywhere():
+        lookup = list(scan.fetch_conversation(spark, wh, "conv-neg")["turn_idx"])
+        sql = sorted(r.turn_idx for r in scan_warehouse(
+            spark, wh, "conv_id = 'conv-neg'").select("turn_idx").collect())
+        full = sorted(r.turn_idx for r in read_warehouse(spark, wh).filter(
+            F.col("conv_id") == "conv-neg").select("turn_idx").collect())
+        assert lookup == sql == full
+        return lookup
+
+    assert turns_everywhere() == [-600, -300, -10, 0, 1, 2]
+
+    n_total = read_warehouse(spark, wh).count()
+    rep = neg.iloc[:3].copy()
+    rep["turn_idx"] = pd.array([-700, -5, 3], dtype="int32")
+    out = routed_rewrite(spark, wh, ["conv-neg"], "up", "test",
+                         replacement=normalize_input(spark.createDataFrame(rep)))
+    assert out["status"] == "ok", out
+    assert out["rows_deleted"] == 6 and out["rows_inserted"] == 3
+    assert turns_everywhere() == [-700, -5, 3]
+
+    out = routed_rewrite(spark, wh, ["conv-neg"], "del", "test")
+    assert out["status"] == "ok" and out["rows_deleted"] == 3
+    assert turns_everywhere() == []
+    assert read_warehouse(spark, wh).count() == n_total - 6
+
+
+def test_point_sql_in_list_routes_from_one_manifests_read(
+    spark, mega_wh, monkeypatch
+):
+    """A pushed conv_id IN list of K ids routes through ONE Router (one
+    manifests read), and plans only the routed partitions' files."""
+    from pyspark.sql.datasource import In
+
+    from vcf2df_spark.datasource import PrunedTranscriptDataSource
+
+    src, wh, _keyed = mega_wh
+    ids = sorted(set(src["conv_id"]) - {MEGA})[:5]
+    routers: list = []
+    real_init = scan.Router.__init__
+
+    def counting_init(self, warehouse):
+        routers.append(warehouse)
+        real_init(self, warehouse)
+
+    ds = PrunedTranscriptDataSource({"path": wh})
+    reader = ds.reader(ds.schema())
+    reader.pushFilters([In(("conv_id",), tuple(ids))])
+    monkeypatch.setattr(scan.Router, "__init__", counting_init)
+    parts = reader.partitions()
+    assert len(routers) == 1
+    assert {p.hive["partition_id"] for p in parts} == set(
+        scan.Router(wh).pids(ids)
+    )

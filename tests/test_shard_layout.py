@@ -64,8 +64,9 @@ def test_sharded_datasource_and_pruned_scan(spark, sharded):
 
 def test_sharded_routed_point_lookup(spark, sharded):
     _, wh = sharded
-    pids, shard_dirs = scan._route(wh, "conv-00000042")
-    assert shard_dirs == 4 and pids is not None and len(pids) == 1
+    router = scan.Router(wh)
+    pids = router.pids(["conv-00000042"])
+    assert router.shard_dirs == 4 and pids is not None and len(pids) == 1
     hit = scan.fetch_conversation(spark, wh, "conv-00000042")
     assert len(hit) > 0 and (hit["conv_id"] == "conv-00000042").all()
     # the routed dir exists exactly where the layout says it should

@@ -473,7 +473,7 @@ def test_streaming_warehouse_point_lookup_routed(spark, tmp_path):
     falling into the conv-range fallback (which cannot prune a hash layout
     and previously dropped partitions with suppressed stats). The lookup
     must return the COMPLETE conversation across epochs."""
-    from vcf2df_spark.scan import _route, fetch_conversation
+    from vcf2df_spark.scan import Router, fetch_conversation
 
     src = fixtures.transcripts_small(n_convs=40)
     indir = tmp_path / "pin"
@@ -492,7 +492,7 @@ def test_streaming_warehouse_point_lookup_routed(spark, tmp_path):
     # routing metadata is on record -> the exact hash route, not the range
     # fallback (which returns [] on streaming layouts without it)
     cid = src["conv_id"].iloc[len(src) // 3]
-    pids, _ = _route(wh, cid)
+    pids = Router(wh).pids([cid])
     assert pids is not None and len(pids) <= 4
 
     got = fetch_conversation(spark, wh, cid)

@@ -216,3 +216,55 @@ def test_upsert_turns_beyond_warehouse_turn_max(spark, wh, tmp_path):
     m = spark.read.parquet(f"{wh}/manifests").toPandas()
     assert m["partition_id"].is_unique
     assert int(m["n_rows"].sum()) == n_total - n_old + 5
+
+
+def test_upsert_replacement_routes_by_its_own_split_range(spark, tmp_path):
+    """The route keeps a split only in partitions whose turn range holds
+    it, so beside a 1,500-turn conversation a small conversation's route
+    leaves out most of its higher splits. A replacement spanning three
+    splits must route by its own split range, or its rows re-key outside
+    the routed set."""
+    from vcf2df_spark.scan import Router
+    from vcf2df_spark.sparkhash import pkey_for
+
+    src = fixtures.transcripts_skew(n_convs=120, mega_len=1500)
+    path = tmp_path / "sksrc.parquet"
+    fixtures.write_parquet(src, str(path))
+    wh = str(tmp_path / "skwh")
+    code, rec = _run(encode_job.main, [
+        "--input", str(path), "--out", wh, "--partitions", "16",
+        "--job-id", "sk", "--master", "local[4]",
+    ])
+    assert code == 0 and rec["status"] == "ok"
+
+    router = Router(wh)
+    cid = next(
+        c for c in sorted(set(src["conv_id"]) - {"conv-00000000"})
+        if not {pkey_for(c, s, 16) for s in (1, 2)} <= set(router.pids([c]))
+    )
+    n_total = len(src)
+    n_old = int((src.conv_id == cid).sum())
+
+    rows = [(cid, i, "user", f"long {i}", "", None)
+            for i in (0, 1, 300, 301, 600)]
+    corrected = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    ).withColumn("ts", F.timestamp_micros(F.lit(1700000000000000)))
+    rep = str(tmp_path / "rep.parquet")
+    corrected.write.parquet(rep)
+
+    code, rec = _run(upsert_job.main, [
+        "--warehouse", wh, "--input", rep, "--master", "local[4]",
+    ])
+    assert code == 0 and rec["status"] == "ok", rec
+    assert rec["rows_deleted"] == n_old and rec["rows_inserted"] == 5
+    assert {pkey_for(cid, s, 16) for s in (0, 1, 2)} <= set(
+        rec["partitions_routed"])
+
+    got = fetch_conversation(spark, wh, cid)
+    assert list(got["turn_idx"]) == [0, 1, 300, 301, 600]
+    mega = fetch_conversation(spark, wh, "conv-00000000")
+    assert list(mega["turn_idx"]) == list(range(1500))
+    assert read_warehouse(spark, wh).count() == n_total - n_old + 5

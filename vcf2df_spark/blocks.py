@@ -64,10 +64,13 @@ MANIFEST_SCHEMA = T.StructType(
         # prune to ~1 partition dir from the tiny manifests table alone
         T.StructField("conv_min", T.StringType(), True),
         T.StructField("conv_max", T.StringType(), True),
-        # hash-routing metadata: with the partitioner's modulus and the max
-        # turn index on record, a lookup COMPUTES its partition dirs
-        # (sparkhash.pkey_for) instead of scanning stats — O(splits) dirs
+        # hash-routing metadata: with the partitioner's modulus on record a
+        # lookup COMPUTES its partition dirs (sparkhash.pkey_for) instead
+        # of scanning stats, and each partition's turn range bounds the
+        # splits it can hold — one dir per split that the partition's turn
+        # range allows (null = unknown, the partition is always opened)
         T.StructField("num_partitions", T.IntegerType(), True),
+        T.StructField("turn_min", T.LongType(), True),
         T.StructField("turn_max", T.LongType(), True),
         # two-level blocks layout: shard=partition_id%shard_dirs above the
         # partition dirs (null = single-level); readers derive dir paths

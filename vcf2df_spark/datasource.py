@@ -471,68 +471,42 @@ class PrunedTranscriptReader(TranscriptReader):
         ]
         return list(filters)
 
-    def _routed_pids(self):
-        """(partition ids, shard_dirs) that can hold the pushed conv_id
-        point keys, from the manifests' hash-routing metadata.
-        (None, None) = no routable filter or no routing metadata (then
-        every file is planned as usual)."""
-        from .scan import _route
-
-        keys: list[str] = []
+    def _point_keys(self) -> list[str]:
+        """conv_id values of the first pushed conv_id equality/IN conjunct
+        (one conjunct suffices; others only narrow further), [] if none."""
         for f in self.pushed:
             if f.attribute[0] != "conv_id":
                 continue
             if isinstance(f, EqualTo) and isinstance(f.value, str):
-                keys.append(f.value)
-            elif isinstance(f, In) and all(
-                isinstance(v, str) for v in f.value
-            ):
-                keys.extend(f.value)
-            else:
-                continue
-            break  # one conjunct suffices; others only narrow further
-        if not keys:
-            return None, None
-        pids: set[int] = set()
-        shard_dirs = None
-        for k in keys:
-            p, shard_dirs = _route(self.warehouse, k)
-            if p is None:
-                return None, None  # no routing metadata -> plan everything
-            pids.update(p)
-        return pids, shard_dirs
+                return [f.value]
+            if isinstance(f, In) and all(isinstance(v, str) for v in f.value):
+                return list(f.value)
+        return []
 
     def partitions(self) -> Sequence[InputPartition]:
         """Task-level pruning for point lookups: a pushed conv_id
-        equality/IN routes through the manifests hash metadata, and ONLY
-        the routed partition dirs are even LISTED — at ~400k partition
-        dirs the full-tree file listing is the dominant planning cost, so
-        a point query opens ~2 dirs instead of discovering the tree
+        equality/IN routes through the manifests hash metadata (one
+        manifests read for the whole IN list, scan.Router), and ONLY the
+        routed partition dirs are even LISTED — at ~400k partition dirs
+        the full-tree file listing is the dominant planning cost, so a
+        point query opens ~1 dir per key instead of discovering the tree
         (the same move as scan.fetch_conversation). Layouts without
         per-partition dirs (flat files, streaming epochs) fall back to the
         full listing, and chunk zone maps still prune inside every task."""
-        import pyarrow.dataset as pads
+        from .scan import Router
 
-        pids, shard_dirs = self._routed_pids()
-        if pids is None:
+        keys = self._point_keys()
+        if not keys:
             return super().partitions()
-        files: list[_BlocksFilePartition] = []
-        for pid in sorted(pids):
-            cand = [f"{self.root}/partition_id={pid}"]
-            if shard_dirs:
-                cand.insert(
-                    0, f"{self.root}/shard={pid % shard_dirs}/partition_id={pid}"
-                )
-            for d in cand:
-                try:
-                    dirfiles = pads.dataset(d, format="parquet").files
-                except (FileNotFoundError, OSError):
-                    continue
-                files.extend(
-                    _BlocksFilePartition(f, {"partition_id": pid})
-                    for f in dirfiles
-                )
-                break
+        router = Router(self.warehouse)
+        pids = router.pids(keys)
+        if pids is None:
+            return super().partitions()  # no routing metadata
+        files = [
+            _BlocksFilePartition(f, {"partition_id": pid})
+            for pid, _d, dset in router.open(pids)
+            for f in dset.files
+        ]
         if files:
             return files
         # routed dirs absent (flat/epoch layout) or a routed miss: plan the

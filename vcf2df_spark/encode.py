@@ -35,8 +35,7 @@ from pyspark.sql import functions as F
 
 from . import arrow_ops, planner, zonemap
 from .blocks import BLOCKS_SCHEMA, TRANSCRIPT_COLUMNS
-
-TURNS_PER_SPLIT = 256  # conversations longer than this are split across partitions
+from .sparkhash import TURNS_PER_SPLIT
 CHUNK_ROWS = 65536
 
 _STRING_COLS = ("conv_id", "role", "text", "tool")

@@ -126,7 +126,7 @@ def build_manifests(
             ).alias("_conv_max_raw"),
             # a chunk whose conv_id/turn_idx stats are null (suppressed or
             # legacy) is NOT covered by the min/max above — F.min/F.max skip
-            # nulls, so without this flag _route's range fallback would
+            # nulls, so without this flag the router's range fallback would
             # silently prune partitions that do hold the key (ADVICE r3)
             F.max(
                 F.when(
@@ -134,15 +134,20 @@ def build_manifests(
                     & F.col("stat_min_str").isNull(), 1
                 ).otherwise(0)
             ).alias("_conv_stat_nulls"),
-            # turn_max bounds the split index of the hash partitioner, so a
-            # lookup knows how many pkey_for(conv, split) dirs to compute
+            # turn_min/turn_max bound the splits of the hash partitioner
+            # this partition can hold: a lookup computes pkey_for(conv,
+            # split) only over the splits some partition's range allows
+            F.min(
+                F.when(F.col("column") == "turn_idx", F.col("stat_min_num"))
+            ).alias("_turn_min_raw"),
             F.max(
                 F.when(F.col("column") == "turn_idx", F.col("stat_max_num"))
             ).alias("_turn_max_raw"),
             F.max(
                 F.when(
                     (F.col("column") == "turn_idx")
-                    & F.col("stat_max_num").isNull(), 1
+                    & (F.col("stat_min_num").isNull()
+                       | F.col("stat_max_num").isNull()), 1
                 ).otherwise(0)
             ).alias("_turn_stat_nulls"),
             # per-partition (column -> ctype) signature: O(partitions)
@@ -183,7 +188,8 @@ def build_manifests(
         F.lit(input_path).alias("input_path"),
         F.lit("committed").alias("status"),
         F.lit(int(time.time() * 1_000_000)).alias("committed_at"),
-        # null conv range = "this partition is unprunable" (_route keeps it)
+        # null conv range = "this partition is unprunable" (the router's
+        # range fallback keeps it)
         F.when(F.col("_conv_stat_nulls") == 0, F.col("_conv_min_raw")).alias(
             "conv_min"
         ),
@@ -191,6 +197,10 @@ def build_manifests(
             "conv_max"
         ),
         F.lit(num_partitions).cast("int").alias("num_partitions"),
+        # null turn range = "any split may be here" (the router keeps it)
+        F.when(F.col("_turn_stat_nulls") == 0, F.col("_turn_min_raw")).alias(
+            "turn_min"
+        ),
         F.when(F.col("_turn_stat_nulls") == 0, F.col("_turn_max_raw")).alias(
             "turn_max"
         ),

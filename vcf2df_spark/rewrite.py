@@ -10,9 +10,11 @@ regenerates the whole output); ours is partition-bounded.
 Commit discipline (same as jobs/encode.py):
 
 1. route: manifests hash-routing metadata -> candidate partition ids
-   (loud failure without it — never a silent full scan); the route covers
-   the replacement's own turn range too, so an upsert beyond the
-   warehouse's persisted turn_max stays inside the routed set;
+   (scan.Router; loud failure without it — never a silent full scan);
+   the replacement's rows route by their own split range, so an upsert
+   spanning splits the warehouse's pruned route leaves out stays inside
+   the routed set. A delete whose ids no routed chunk holds returns
+   noop here, before any write;
 2. stage: ONLY the routed partition dirs are read (basePath read — no
    full-tree listing), target conversations drop out, replacement rows
    (if any) union in, survivors re-encode through the SAME salted hash
@@ -130,11 +132,6 @@ def routed_rewrite(
         raise RewriteError(str(e)) from None
 
 
-def _blocks_dir(root: str, pid: int, shard_dirs: int | None) -> str:
-    return (f"{root}/shard={pid % shard_dirs}/partition_id={pid}"
-            if shard_dirs else f"{root}/partition_id={pid}")
-
-
 def _routed_rewrite_locked(
     spark: SparkSession,
     wh: str,
@@ -147,24 +144,21 @@ def _routed_rewrite_locked(
 
     from . import fsutil, manifest
     from .decode import decode_blocks
-    from .encode import TURNS_PER_SPLIT, encode_keyed, with_partition_key
-    from .scan import _route_many, _routing_meta
-    from .sparkhash import pkey_for
+    from .encode import encode_keyed, with_partition_key
+    from .scan import Router, blocks_dir, locate
 
     conv_ids = sorted(set(conv_ids))
     # ONE manifests read routes the whole batch (a per-id loop would pay
-    # K full metadata reads on a bulk GDPR delete)
-    p_list, shard_dirs = _route_many(wh, conv_ids)
-    if p_list is None:
+    # K full metadata reads on a bulk GDPR delete) and carries the
+    # rewrite-planning metadata — no Spark distinct job (r6)
+    router = Router(wh)
+    if not router.routable:
         raise RewriteError(
             "warehouse has no manifests routing metadata "
             "(num_partitions); targeted rewrite needs it — re-encode "
             "with jobs/encode.py or compact first"
         )
-    pids: set = set(p_list)
-
-    meta = _routing_meta(wh)  # driver pyarrow: no Spark distinct job (r6)
-    if meta["has_epoch"]:
+    if router.has_epoch:
         raise RewriteError(
             "streaming (epoch-partitioned) warehouses cannot be rewritten "
             "in place; compact to a batch warehouse first "
@@ -172,31 +166,32 @@ def _routed_rewrite_locked(
             "--via-compact --out NEW_WH folds the erasure into that "
             "compaction"
         )
-    mods = meta["mods"]
-    num_partitions = mods.pop() if len(mods) == 1 and None not in mods else None
+    num_partitions = router.num_partitions
     if num_partitions is None:
         raise RewriteError(
             "ambiguous num_partitions across manifest rows; compact the "
             "warehouse to one partitioner first"
         )
+    shard_dirs = router.shard_dirs
 
-    # ADVICE r5 (medium): an upsert whose replacement carries turn_idx
-    # beyond the warehouse's persisted turn_max would re-key rows into
-    # partitions OUTSIDE the manifest-derived routed set. Extend the route
-    # with the replacement's own turn range (one tiny agg on the small
-    # side); the post-staging stray check below stays as the loud guard.
+    # the route prunes each split to the partitions whose turn range holds
+    # it, so replacement rows must route by their OWN split range (one
+    # tiny agg on the small side): a replacement that spans splits the
+    # conversation never had, or beyond the warehouse's turn_max, re-keys
+    # into partitions the pruned route leaves out. The post-staging stray
+    # check below stays as the loud guard.
     n_inserted = 0
+    write_turns = None
     if replacement is not None:
         rep_agg = replacement.agg(
-            F.count(F.lit(1)).alias("n"), F.max("turn_idx").alias("tmax")
+            F.count(F.lit(1)).alias("n"),
+            F.min("turn_idx").alias("tmin"),
+            F.max("turn_idx").alias("tmax"),
         ).collect()[0]
         n_inserted = int(rep_agg["n"])
-        if rep_agg["tmax"] is not None and meta["turn_max"] is not None:
-            lo = meta["turn_max"] // TURNS_PER_SPLIT + 1
-            hi = int(rep_agg["tmax"]) // TURNS_PER_SPLIT + 1
-            for cid in conv_ids:
-                for s in range(lo, hi):
-                    pids.add(pkey_for(cid, s, num_partitions))
+        if rep_agg["tmin"] is not None:
+            write_turns = (int(rep_agg["tmin"]), int(rep_agg["tmax"]))
+    pids: list[int] = router.pids(conv_ids, write_turns)
 
     # decode ONLY the routed partitions. Reading the routed dirs directly
     # (basePath keeps the hive partition_id column) skips the full-tree
@@ -204,24 +199,30 @@ def _routed_rewrite_locked(
     # partition dirs the listing IS the planning cost — and keeps the
     # blocks relation a bare scan, so decode's schema derivation stays
     # driver-side (no Spark aggregate job).
-    root = f"{wh}/blocks"
-    routed_dirs = []
-    for pid in sorted(pids):
-        cands = [f"{root}/partition_id={pid}"]
-        if shard_dirs:
-            cands.insert(0, _blocks_dir(root, pid, shard_dirs))
-        for d in cands:
-            if os.path.isdir(d):
-                routed_dirs.append(d)
-                break
-    if routed_dirs:
-        blocks = spark.read.option("basePath", root).parquet(*routed_dirs)
+    root = router.root
+    opened = router.open(pids)
+
+    # a delete none of whose ids is in a routed chunk is a noop: the
+    # lookup's zone-map + conv_id locate step (driver pyarrow, no Spark
+    # job) decides it before any staged write
+    if replacement is None and not locate(
+        router.sources(opened), conv_ids, pids
+    ):
+        return {
+            "status": "noop", "rows_deleted": 0, "rows_inserted": 0,
+            "partitions_routed": pids,
+        }
+
+    if opened:
+        blocks = spark.read.option("basePath", root).parquet(
+            *[d for _pid, d, _dset in opened]
+        )
     else:
         # no routed dir exists (pure insert into fresh partitions, or a
         # miss): fall back to the tree + filter — also the path that keeps
         # non-hive layouts failing exactly as before
         blocks = spark.read.parquet(root).filter(
-            F.col("partition_id").isin(sorted(pids))
+            F.col("partition_id").isin(pids)
         )
     dec = decode_blocks(blocks)
 
@@ -261,7 +262,7 @@ def _routed_rewrite_locked(
         fsutil.rmtree_checked(staging)
         return {
             "status": "noop", "rows_deleted": 0, "rows_inserted": 0,
-            "partitions_routed": sorted(pids),
+            "partitions_routed": pids,
         }
 
     # staged partition dirs ARE the rewritten-partition set
@@ -285,7 +286,7 @@ def _routed_rewrite_locked(
     # write reads wh/manifests, the swap is driver-side fs ops).
     manifests_all = spark.read.parquet(f"{wh}/manifests")
     untouched = _manifest_projection(
-        manifests_all.filter(~F.col("partition_id").isin(sorted(pids)))
+        manifests_all.filter(~F.col("partition_id").isin(pids))
     )
     if live_pids:
         fresh = _manifest_projection(
@@ -302,14 +303,13 @@ def _routed_rewrite_locked(
     # commit blocks: swap the routed dirs for their staged replacements;
     # a partition emptied by the delete has no staged dir — removed.
     emptied = sorted(set(pids) - live_pids)
-    for pid in sorted(pids):
-        dst = _blocks_dir(root, pid, shard_dirs)
-        legacy = f"{root}/partition_id={pid}"
+    for pid in pids:
+        dst = blocks_dir(root, pid, shard_dirs)
+        legacy = blocks_dir(root, pid, None)
         for d in {dst, legacy}:
             if os.path.isdir(d):
                 fsutil.rmtree_checked(d)
-        src = (f"{staging}/blocks/shard={pid % shard_dirs}/partition_id={pid}"
-               if shard_dirs else f"{staging}/blocks/partition_id={pid}")
+        src = blocks_dir(f"{staging}/blocks", pid, shard_dirs)
         if os.path.isdir(src):
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.rename(src, dst)
@@ -328,7 +328,7 @@ def _routed_rewrite_locked(
         "status": "ok",
         "rows_deleted": int(n_before - n_after),
         "rows_inserted": int(n_inserted),
-        "partitions_routed": sorted(pids),
+        "partitions_routed": pids,
         "partitions_rewritten": sorted(live_pids),
         "partitions_emptied": emptied,
     }

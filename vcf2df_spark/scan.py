@@ -112,202 +112,207 @@ def qualifying_chunks(
     return qual
 
 
-def _manifest_conv_partitions(warehouse: str, conv_id: str) -> list[int] | None:
-    """Partition ids that can contain ``conv_id``, from the manifests table
-    (one tiny row per partition — O(partitions) metadata, never blocks).
+def blocks_dir(root: str, pid: int, shard_dirs: int | None) -> str:
+    """The dir partition ``pid`` is written to under a blocks ``root``:
+    ``shard=pid % shard_dirs/partition_id=pid`` in the two-level layout,
+    ``partition_id=pid`` otherwise."""
+    return (f"{root}/shard={pid % shard_dirs}/partition_id={pid}"
+            if shard_dirs else f"{root}/partition_id={pid}")
 
-    Preferred route: the encode partitioner is a deterministic hash
-    (``pmod(xxhash64(conv_id, turn_idx // 256), N)``), so with the modulus
-    and the max turn index on record the lookup COMPUTES its partition dirs
-    (sparkhash.pkey_for) — ~1 dir per 256-turn split, independent of
-    warehouse size. Conv min/max ranges can't prune a hash layout (every
-    partition spans the keyspace), but serve as the fallback for manifests
-    written without routing metadata and for future range layouts.
 
-    Returns None when no pruning is possible (no manifests dir —
-    bench/test warehouses — or legacy columns); rows with null metadata
-    (legacy appends) conservatively disable the affected route.
+class Router:
+    """Partition dirs that can hold given conversations, from ONE
+    driver-side manifests read (one tiny row per partition — O(partitions)
+    metadata, never blocks). The lookup, the DataSource point-SQL planner
+    and the routed rewrite all route through it.
+
+    The encode partitioner is a deterministic hash
+    (``pmod(xxhash64(conv_id, split_of(turn_idx)), N)``), so with the
+    modulus on record the router COMPUTES a conversation's partitions
+    (sparkhash.pkey_for) for each split of the warehouse's turn range, and
+    keeps one directory per split that the partition's turn range allows:
+    partition p can hold split s only if ``split_of(turn_min) <= s <=
+    split_of(turn_max)`` over p's committed rows. A small conversation in
+    a warehouse with one long agent run thus opens ~1 dir, not one per
+    split of the longest conversation. Pruning is conservative: a
+    partition with no committed row or null turn stats is kept, and
+    legacy manifests (no turn_min) keep every split from 0 up.
+
+    Conv min/max ranges can't prune a hash layout (every partition spans
+    the keyspace), but serve as the fallback for manifests written without
+    routing metadata and for future range layouts.
     """
-    return _route(warehouse, conv_id)[0]
 
+    def __init__(self, warehouse: str):
+        import pyarrow.dataset as pads
 
-def _route(warehouse: str, conv_id: str):
-    """(partition ids or None, shard_dirs or None) from the manifests."""
-    return _route_many(warehouse, [conv_id])
+        self.root = f"{warehouse}/blocks"
+        self.num_partitions = None  # the one modulus over ALL rows, if one
+        self.shard_dirs = None
+        self.has_epoch = False
+        self._rows: list[dict] = []  # committed rows; [] = cannot route
+        try:
+            d = pads.dataset(
+                f"{warehouse}/manifests", format="parquet", partitioning="hive"
+            )
+            names = d.schema.names
+            rows = d.to_table(columns=[
+                c for c in ("partition_id", "status", "conv_min", "conv_max",
+                            "num_partitions", "turn_min", "turn_max",
+                            "shard_dirs")
+                if c in names
+            ]).to_pylist()
+        except (FileNotFoundError, OSError):
+            return
+        self.has_epoch = "epoch" in names
+        mods = {r.get("num_partitions") for r in rows}
+        if len(mods) == 1:
+            self.num_partitions = mods.pop()
+        shard_vals = {r.get("shard_dirs") for r in rows} - {None}
+        self.shard_dirs = shard_vals.pop() if len(shard_vals) == 1 else None
+        if "conv_min" in names and "conv_max" in names:
+            self._rows = [r for r in rows if r.get("status") == "committed"]
 
+    @property
+    def routable(self) -> bool:
+        return bool(self._rows)
 
-def _route_many(warehouse: str, conv_ids):
-    """Batch routing: (sorted partition ids or None, shard_dirs or None)
-    for ALL of ``conv_ids`` from ONE manifests read. A per-id `_route`
-    loop re-reads the manifests table per key — at ~400k manifest rows a
-    bulk GDPR delete of K conversations would pay K full metadata reads;
-    this pays one read plus K hash computations."""
-    import pyarrow.dataset as pads
+    def pids(self, conv_ids, write_turns: tuple[int, int] | None = None):
+        """Sorted partition ids that can hold any row of ``conv_ids``, or
+        None when the manifests cannot route (none, legacy columns, no
+        committed row). ``write_turns`` is the (min, max) turn_idx of rows
+        about to be WRITTEN for these ids (a rewrite's replacement): their
+        splits route unpruned, as no manifest records them yet."""
+        from .sparkhash import pkey_for, split_of
 
-    from .encode import TURNS_PER_SPLIT
-    from .sparkhash import pkey_for
-
-    try:
-        d = pads.dataset(
-            f"{warehouse}/manifests", format="parquet", partitioning="hive"
-        )
-        names = d.schema.names
-        if "conv_min" not in names or "conv_max" not in names:
-            return None, None
-        cols = ["partition_id", "conv_min", "conv_max"] + [
-            c for c in ("num_partitions", "turn_max", "shard_dirs")
-            if c in names
-        ]
-        t = d.to_table(
-            columns=cols, filter=pads.field("status") == "committed"
-        ).to_pylist()
-    except (FileNotFoundError, OSError):
-        return None, None
-    if not t:
-        return None, None
-
-    shard_vals = {r.get("shard_dirs") for r in t} - {None}
-    shard_dirs = shard_vals.pop() if len(shard_vals) == 1 else None
-
-    mods = {r.get("num_partitions") for r in t}
-    turn_maxes = [r.get("turn_max") for r in t]
-    if None not in mods and mods and None not in turn_maxes:
-        n_splits = max(turn_maxes) // TURNS_PER_SPLIT + 1
-        return sorted(
-            {
-                pkey_for(cid, s, n)
-                for cid in conv_ids for n in mods for s in range(n_splits)
+        rows = self._rows
+        if not rows:
+            return None
+        mods = {r.get("num_partitions") for r in rows}
+        out: set[int] = set()
+        if None not in mods and all(r.get("turn_max") is not None
+                                    for r in rows):
+            # per-partition split span; None = unknown, always kept
+            span: dict[int, tuple[int, int] | None] = {}
+            for r in rows:
+                p, tmin = r["partition_id"], r.get("turn_min")
+                if tmin is None or (p in span and span[p] is None):
+                    span[p] = None
+                    continue
+                lo, hi = split_of(tmin), split_of(r["turn_max"])
+                if p in span:
+                    lo, hi = min(lo, span[p][0]), max(hi, span[p][1])
+                span[p] = (lo, hi)
+            mins = [split_of(r["turn_min"]) for r in rows
+                    if r.get("turn_min") is not None]
+            lo = min(mins + ([0] if len(mins) < len(rows) else []))
+            hi = split_of(max(r["turn_max"] for r in rows))
+            for n in mods:
+                for cid in conv_ids:
+                    for s in range(lo, hi + 1):
+                        p = pkey_for(cid, s, n)
+                        sp = span.get(p)
+                        if p not in span or sp is None or sp[0] <= s <= sp[1]:
+                            out.add(p)
+        else:
+            # range fallback: keep rows whose conv range covers ANY key (or
+            # whose range is unknown)
+            out = {
+                r["partition_id"]
+                for r in rows
+                if r["conv_min"] is None
+                or any(r["conv_min"] <= c <= r["conv_max"] for c in conv_ids)
             }
-        ), shard_dirs
+        if write_turns is not None:
+            lo, hi = (split_of(t) for t in write_turns)
+            out.update(
+                pkey_for(cid, s, n)
+                for n in mods - {None} for cid in conv_ids
+                for s in range(lo, hi + 1)
+            )
+        return sorted(out)
 
-    # range fallback: keep rows whose conv range covers ANY key (or whose
-    # range is unknown)
-    return sorted(
-        {
-            r["partition_id"]
-            for r in t
-            if r["conv_min"] is None
-            or any(r["conv_min"] <= cid <= r["conv_max"] for cid in conv_ids)
-        }
-    ), shard_dirs
+    def open(self, pids) -> list[tuple[int, str, object]]:
+        """(pid, dir, pyarrow dataset) for each of ``pids`` whose dir holds
+        files — the sharded dir first when the manifests record a shard
+        layout, then the single-level one; [] for ``pids`` None. Opening
+        the routed dirs directly skips the whole-tree discovery, which at
+        ~400k partition dirs is the dominant planning cost. pyarrow.dataset
+        handles local/S3/HDFS paths alike."""
+        import pyarrow.dataset as pads
 
-
-def _routing_meta(warehouse: str) -> dict:
-    """Rewrite-planning metadata from ONE driver-side manifests read:
-    ``mods`` (the set of num_partitions values across ALL manifest rows,
-    committed or not — mirroring the rewrite's ambiguity check), ``turn_max``
-    (max persisted turn_max, None when any row lacks it), ``shard_dirs``,
-    and ``has_epoch``. Replaces a Spark distinct+collect job per rewrite
-    with an O(partitions) pyarrow metadata read."""
-    import pyarrow.dataset as pads
-
-    out = {"mods": set(), "turn_max": None, "shard_dirs": None,
-           "has_epoch": False}
-    try:
-        d = pads.dataset(
-            f"{warehouse}/manifests", format="parquet", partitioning="hive"
-        )
-        names = d.schema.names
-        out["has_epoch"] = "epoch" in names
-        cols = [c for c in ("num_partitions", "turn_max", "shard_dirs")
-                if c in names]
-        rows = d.to_table(columns=cols).to_pylist() if cols else []
-    except (FileNotFoundError, OSError):
-        return out
-    if not rows:
-        return out
-    out["mods"] = {r.get("num_partitions") for r in rows}
-    tm = [r.get("turn_max") for r in rows]
-    if None not in tm:
-        out["turn_max"] = max(tm)
-    shard_vals = {r.get("shard_dirs") for r in rows} - {None}
-    out["shard_dirs"] = shard_vals.pop() if len(shard_vals) == 1 else None
-    return out
-
-
-def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
-    """Point lookup: one conversation, decoding the minimum possible —
-    WITHOUT launching a Spark job.
-
-    Interactive lookups shouldn't pay a cluster round-trip: this is pure
-    driver-side (client-side) metadata navigation, the same way a key-value
-    get against a columnar store works. Three bounded steps: (1) the
-    manifests table (one row per partition) prunes to the ~1 partition dir
-    whose conv range covers the key; (2) that directory's chunk zone maps
-    (parquet-filtered stats rows) prune to the ~1 candidate chunk; (3) the
-    candidate chunk's key columns decode to locate the row span and
-    ``text`` decodes via random access (only the FSST/raw byte range
-    covering those rows). pyarrow.dataset handles local/S3/HDFS paths
-    alike. Returns a pandas DataFrame ordered by turn_idx.
-
-    ``spark`` is unused (kept for call-site compatibility with the scan
-    DataFrame APIs and so the CLI can share one entry path).
-    """
-    import bisect
-    import json
-
-    import pandas as pd
-    import pyarrow.dataset as pads
-
-    from . import arrow_ops, codecs
-    from .decode import _CORE_CTYPES, _column_order
-
-    root = f"{warehouse}/blocks"
-
-    # routing first: with hash metadata the lookup opens EXACTLY the routed
-    # partition dirs — no whole-tree dataset discovery, which at ~400k
-    # partition dirs is the dominant cost. Falls back to one hive-discovered
-    # dataset over the tree (bench/flat/epoch layouts, legacy manifests).
-    pids, shard_dirs = _route(warehouse, conv_id)
-    sources: list[tuple] = []  # (dataset, fixed_key_dict)
-    if pids is not None:
-        for pid in pids:
-            cand_dirs = [f"{root}/partition_id={pid}"]
-            if shard_dirs:
-                cand_dirs.insert(
-                    0, f"{root}/shard={pid % shard_dirs}/partition_id={pid}"
-                )
-            for d in cand_dirs:
+        out = []
+        for pid in pids or ():
+            cands = [blocks_dir(self.root, pid, None)]
+            if self.shard_dirs:
+                cands.insert(0, blocks_dir(self.root, pid, self.shard_dirs))
+            for d in cands:
                 try:
-                    sources.append(
-                        (pads.dataset(d, format="parquet"),
-                         {"partition_id": pid})
-                    )
-                    break
+                    dset = pads.dataset(d, format="parquet")
                 except (FileNotFoundError, OSError):
                     continue
-    if not sources:
-        dset = pads.dataset(root, format="parquet", partitioning="hive")
-        sources = [(dset, {})]
+                if dset.files:
+                    out.append((pid, d, dset))
+                    break
+        return out
 
-    def _decode_str_row(r, n, lo=0, hi=None):
-        m = json.loads(r["meta"])
-        payload, aux = bytes(r["payload"] or b""), bytes(r["aux"] or b"")
-        if hi is None:
-            return arrow_ops.decode_string_column(r["codec"], payload, aux, m, n)
-        return arrow_ops.decode_string_rows(r["codec"], payload, aux, m, n, lo, hi)
+    def sources(self, opened) -> list[tuple]:
+        """(dataset, fixed hive keys) pairs to read: the ``opened`` routed
+        dirs, or — when none is on disk (flat/epoch layouts, no routing
+        metadata, a routed miss) — one hive-discovered dataset over the
+        whole blocks tree."""
+        import pyarrow.dataset as pads
 
-    def _key_of(r, fixed):
-        return (
-            fixed.get("partition_id", r.get("partition_id")),
-            r["chunk_idx"],
-            r.get("epoch"),
-        )
+        if opened:
+            return [(dset, {"partition_id": pid}) for pid, _d, dset in opened]
+        return [(pads.dataset(self.root, format="parquet",
+                              partitioning="hive"), {})]
 
-    # phase A — locate: candidate chunks from zone maps, then decode ONLY
-    # their conv_id blocks (bytes per conversation, strnum/dict-coded) and
-    # bisect for the exact row span. Under hash partitioning every chunk's
-    # conv range spans the keyspace, so this phase must stay cheap even
-    # when zone maps can't prune: payload bytes of the OTHER columns are
-    # not touched here.
+
+def _decode_str_row(r, n, lo=0, hi=None):
+    """A string block row's values (rows [lo, hi) via random access)."""
+    import json
+
+    from . import arrow_ops
+
+    m = json.loads(r["meta"])
+    payload, aux = bytes(r["payload"] or b""), bytes(r["aux"] or b"")
+    if hi is None:
+        return arrow_ops.decode_string_column(r["codec"], payload, aux, m, n)
+    return arrow_ops.decode_string_rows(r["codec"], payload, aux, m, n, lo, hi)
+
+
+def _key_of(r, fixed):
+    return (
+        fixed.get("partition_id", r.get("partition_id")),
+        r["chunk_idx"],
+        r.get("epoch"),
+    )
+
+
+def locate(sources, conv_ids, pids=None) -> list[tuple]:
+    """(source index, chunk key, lo, hi, conv_id values) for every chunk
+    span holding one of the sorted ``conv_ids``.
+
+    Candidate chunks come from the conv_id zone maps; only their conv_id
+    blocks decode (bytes per conversation, strnum/dict-coded), and a
+    bisect finds each id's exact row span. Under hash partitioning every
+    chunk's conv range spans the keyspace, so this must stay cheap even
+    when zone maps can't prune: payload bytes of the OTHER columns are not
+    touched. ``pids`` restricts a whole-tree source to the routed
+    partitions."""
+    import bisect
+
+    import pyarrow.dataset as pads
+
     hits: list[tuple[int, tuple, int, int, list[str]]] = []
     for si, (dset, fixed) in enumerate(sources):
         names = dset.schema.names
         extra_keys = [c for c in ("partition_id", "epoch") if c in names]
         cand_filter = (
             (pads.field("column") == "conv_id")
-            & (pads.field("stat_min_str") <= conv_id)
-            & (pads.field("stat_max_str") >= conv_id)
+            & (pads.field("stat_min_str") <= conv_ids[-1])
+            & (pads.field("stat_max_str") >= conv_ids[0])
         )
         if not fixed and pids is not None and "partition_id" in names:
             cand_filter = cand_filter & pads.field("partition_id").isin(pids)
@@ -317,12 +322,49 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
             filter=cand_filter,
         ).to_pylist()
         for r in cand:
-            n = int(r["n_rows"])
-            cids = _decode_str_row(r, n).to_pylist()
-            lo = bisect.bisect_left(cids, conv_id)  # chunk sorted by conv_id
-            hi = bisect.bisect_right(cids, conv_id)
-            if hi > lo:
-                hits.append((si, _key_of(r, fixed), lo, hi, cids[lo:hi]))
+            cids = _decode_str_row(r, int(r["n_rows"])).to_pylist()
+            for cid in conv_ids:
+                lo = bisect.bisect_left(cids, cid)  # chunk sorted by conv_id
+                hi = bisect.bisect_right(cids, cid)
+                if hi > lo:
+                    hits.append((si, _key_of(r, fixed), lo, hi, cids[lo:hi]))
+    return hits
+
+
+def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
+    """Point lookup: one conversation, decoding the minimum possible —
+    WITHOUT launching a Spark job.
+
+    Interactive lookups shouldn't pay a cluster round-trip: this is pure
+    driver-side (client-side) metadata navigation, the same way a key-value
+    get against a columnar store works. Three bounded steps: (1) the
+    manifests table (one row per partition) routes to the partition dirs
+    that can hold the key (:class:`Router`); (2) those directories' chunk
+    zone maps (parquet-filtered stats rows) prune to the ~1 candidate
+    chunk; (3) the candidate chunk's key columns decode to locate the row
+    span (:func:`locate`) and ``text`` decodes via random access (only the
+    FSST/raw byte range covering those rows). Returns a pandas DataFrame
+    ordered by turn_idx.
+
+    ``spark`` is unused (kept for call-site compatibility with the scan
+    DataFrame APIs and so the CLI can share one entry path).
+    """
+    import json
+
+    import pandas as pd
+    import pyarrow.dataset as pads
+
+    from . import codecs
+    from .decode import _CORE_CTYPES, _column_order
+
+    # routing first: with hash metadata the lookup opens EXACTLY the routed
+    # partition dirs; without it, one hive-discovered dataset over the tree
+    router = Router(warehouse)
+    pids = router.pids([conv_id])
+    sources = router.sources(router.open(pids))
+
+    # phase A — locate the chunks and row spans holding the conversation
+    hits = locate(sources, [conv_id], pids)
 
     if not hits:
         # empty-result schema from the warehouse's own metadata, so a
@@ -330,7 +372,7 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
         # — never a hardcoded core list or whichever chunk iterated last
         from .datasource import infer_ctypes
 
-        return pd.DataFrame(columns=_column_order(infer_ctypes(root)))
+        return pd.DataFrame(columns=_column_order(infer_ctypes(router.root)))
 
     # phase B — fetch: full block rows for ONLY the chunks that truly
     # contain the conversation (typically one)

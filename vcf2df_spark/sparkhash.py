@@ -26,6 +26,8 @@ _P5 = 0x27D4EB2F165667C5
 
 SPARK_SEED = 42
 
+TURNS_PER_SPLIT = 256  # conversations longer than this are split across partitions
+
 
 def _rotl(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & _MASK
@@ -115,7 +117,16 @@ def spark_xxhash64(*values) -> int:
     return _to_signed(h)
 
 
+def split_of(turn_idx: int) -> int:
+    """The salt ``encode.with_partition_key`` gives a turn:
+    ``(turn_idx / 256).cast("int")`` truncates toward zero, so turns
+    -255..255 share split 0 and -256 is split -1 (Python's ``//`` floors,
+    which disagrees for every negative index)."""
+    q = abs(int(turn_idx)) // TURNS_PER_SPLIT
+    return q if turn_idx >= 0 else -q
+
+
 def pkey_for(conv_id: str, split: int, num_partitions: int) -> int:
     """The exact partition ``encode.with_partition_key`` routes
-    (conv_id, turn_idx in [split*256, ...)) to."""
+    (conv_id, turns with ``split_of(turn_idx) == split``) to."""
     return spark_xxhash64(conv_id, split) % num_partitions  # pmod: py % is >=0

@@ -9,7 +9,7 @@ claims about where the time goes are reproducible.
 
 Prints one JSON line with median-of-N timings for: the input scan, the
 encode shuffle alone, the full encode (noop sink), the decode schema
-derivation (Spark aggregate vs driver fast path), grouped decode, the
+derivation (Spark feeder vs file feeder), grouped decode, the
 datasource scan, the verify signatures, and the routed rewrite pair.
 """
 
@@ -38,7 +38,7 @@ def main() -> None:
     import bench
     from vcf2df_spark import datasource
     from vcf2df_spark.decode import (
-        _ctypes_fast, decode_blocks, schema_from_blocks,
+        decode_blocks, file_sigs, resolve_ctypes, spark_sigs,
     )
     from vcf2df_spark.encode import (
         encode_keyed, normalize_input, with_partition_key,
@@ -83,11 +83,13 @@ def main() -> None:
     out["encode_write_sec"] = round(time.time() - t0, 3)
 
     stored = spark.read.parquet(f"{wh}/blocks")
-    sc.setJobDescription("extra: schema derivation (Spark aggregate)")
-    out["schema_spark_job_sec"] = timed(lambda: schema_from_blocks(stored))
-    sc.setJobDescription("extra: schema derivation (driver fast path)")
+    files = [f.removeprefix("file:") for f in stored.inputFiles()]
+    sc.setJobDescription("extra: schema derivation (Spark feeder)")
+    out["schema_spark_job_sec"] = timed(
+        lambda: resolve_ctypes(spark_sigs(stored)))
+    sc.setJobDescription("extra: schema derivation (file feeder)")
     out["schema_fast_path_sec"] = timed(
-        lambda: _ctypes_fast(stored, None, False))
+        lambda: resolve_ctypes(file_sigs(files)))
     sc.setJobDescription("extra: grouped decode")
     out["decode_grouped_count_sec"] = timed(
         lambda: decode_blocks(stored).count())

@@ -51,16 +51,15 @@ def main(argv: list[str] | None = None) -> None:
 
         decoded = read_warehouse(spark, args.warehouse)
     else:
-        # the manifests' schema_sig (when present) skips the per-call
-        # schema-derivation aggregate — one Spark job of pure overhead
-        # (~0.3 s measured, the r3 grouped-decode regression); warehouses
-        # without manifests keep the loud heterogeneity-checking derivation
-        from vcf2df_spark.datasource import _ctypes_from_manifests
+        # the read path's own planning (manifests' schema_sig, else the
+        # blocks files) resolves the schema with no Spark job — the
+        # per-call derivation aggregate was ~0.3 s of pure overhead (the
+        # r3 grouped-decode regression)
+        from vcf2df_spark.datasource import infer_ctypes
         from vcf2df_spark.decode import schema_from_ctypes
 
-        ctypes = _ctypes_from_manifests(args.warehouse)
-        pre = schema_from_ctypes(ctypes) if ctypes is not None else None
-        decoded = decode_blocks(blocks, out_schema=pre)
+        ctypes = infer_ctypes(f"{args.warehouse}/blocks")
+        decoded = decode_blocks(blocks, out_schema=schema_from_ctypes(ctypes))
     source = normalize_input(spark.read.parquet(args.source))
 
     # manifest integrity: recompute each partition's content checksum from

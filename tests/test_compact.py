@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from jobs import compact
 from vcf2df_spark import datasource, fixtures, scan
 from vcf2df_spark.encode import encode_transcripts, normalize_input
+from warehouses import evolved_wh, type_change_wh
 
 
 def _stream_wh(spark, tmp_path) -> tuple[str, int]:
@@ -102,27 +103,6 @@ def test_compact_retention_sweep(spark, tmp_path, capsys):
     assert got == want
 
 
-def _evolved_wh(spark, tmp_path) -> tuple[str, int, int]:
-    """Epoch 0: core six columns. Epoch 1: adds (score f64, model str) —
-    the streaming schema-change case the strict decode refuses."""
-    root = str(tmp_path / "evwh")
-    pdf0 = fixtures.transcripts_small(n_convs=30, seed=5)
-    pdf0["conv_id"] = "a-" + pdf0["conv_id"]
-    src0 = normalize_input(spark.createDataFrame(pdf0))
-    encode_transcripts(src0, num_partitions=2, chunk_rows=64).write.parquet(
-        f"{root}/blocks/epoch=0"
-    )
-    pdf1 = fixtures.transcripts_small(n_convs=20, seed=6)
-    pdf1["conv_id"] = "b-" + pdf1["conv_id"]
-    pdf1["score"] = [float(i % 7) / 2 for i in range(len(pdf1))]
-    pdf1["model"] = ["m-" + str(i % 3) for i in range(len(pdf1))]
-    src1 = normalize_input(spark.createDataFrame(pdf1))
-    encode_transcripts(src1, num_partitions=2, chunk_rows=64).write.parquet(
-        f"{root}/blocks/epoch=1"
-    )
-    return root, len(pdf0), len(pdf1)
-
-
 def test_merge_schemas_decode_and_compact(spark, tmp_path, capsys):
     """Additive schema evolution: strict reads fail loudly with the
     remedy in the message; decode_blocks(merge_schemas=True) unions the
@@ -132,7 +112,8 @@ def test_merge_schemas_decode_and_compact(spark, tmp_path, capsys):
 
     from vcf2df_spark.decode import decode_blocks
 
-    root, n0, n1 = _evolved_wh(spark, tmp_path)
+    root = str(tmp_path / "evwh")
+    n0, n1 = evolved_wh(spark, root)
     blocks = spark.read.parquet(f"{root}/blocks")
 
     with _pytest.raises(Exception, match="merge-schemas"):
@@ -171,19 +152,7 @@ def test_merge_schemas_rejects_type_change(spark, tmp_path):
     from vcf2df_spark.decode import decode_blocks
 
     root = str(tmp_path / "tcwh")
-    pdf0 = fixtures.transcripts_small(n_convs=10, seed=7)
-    pdf0["flag"] = [float(i) for i in range(len(pdf0))]  # f64
-    src0 = normalize_input(spark.createDataFrame(pdf0))
-    encode_transcripts(src0, num_partitions=1, chunk_rows=64).write.parquet(
-        f"{root}/blocks/epoch=0"
-    )
-    pdf1 = fixtures.transcripts_small(n_convs=10, seed=8)
-    pdf1["conv_id"] = "z-" + pdf1["conv_id"]
-    pdf1["flag"] = [i % 2 == 0 for i in range(len(pdf1))]  # bool
-    src1 = normalize_input(spark.createDataFrame(pdf1))
-    encode_transcripts(src1, num_partitions=1, chunk_rows=64).write.parquet(
-        f"{root}/blocks/epoch=1"
-    )
+    type_change_wh(spark, root)
     blocks = spark.read.parquet(f"{root}/blocks")
     with _pytest.raises(Exception, match="two ctypes"):
         decode_blocks(blocks, merge_schemas=True).count()

@@ -25,6 +25,7 @@ from vcf2df_spark import datasource, fixtures
 from vcf2df_spark.datasource import PrunedTranscriptDataSource, chunk_overlaps
 from vcf2df_spark.decode import decode_blocks
 from vcf2df_spark.encode import encode_transcripts, normalize_input
+from warehouses import colliding_wh, drop_block, evolved_wh, type_change_wh
 
 
 @pytest.fixture(scope="module")
@@ -208,13 +209,91 @@ def test_chunk_overlaps_pure():
     )
 
 
+# --- every read path, one verdict -------------------------------------------
+
+_READ_PATHS = {
+    "decode_blocks": lambda spark, root, cols: decode_blocks(
+        spark.read.parquet(f"{root}/blocks"), columns=cols),
+    "decode_blocks_spark_feeder": lambda spark, root, cols: decode_blocks(
+        spark.read.parquet(f"{root}/blocks").where("true"), columns=cols),
+    "read_warehouse": lambda spark, root, cols: datasource.read_warehouse(
+        spark, root, cols),
+    "scan_warehouse": lambda spark, root, cols: datasource.scan_warehouse(
+        spark, root, "turn_idx >= 0", cols),
+}
+_VERDICTS = ("colliding chunk keys", "heterogeneous chunk schemas",
+             "two ctypes", "missing column blocks")
+_COMMON = ["conv_id", "turn_idx"]
+
+
+def _outcome(fn):
+    """Sorted result rows, or the loud-failure phrase the read raised."""
+    try:
+        return sorted(tuple(r) for r in fn().collect())
+    except Exception as e:  # noqa: BLE001 — the message is the verdict
+        return next((v for v in _VERDICTS if v in str(e)), str(e))
+
+
 def test_incomplete_chunk_group_fails_loudly(spark, tmp_path, wh):
+    """A chunk missing one column's block: every read path refuses it with
+    the one message of the shared schema resolver."""
     broken = str(tmp_path / "broken")
-    spark.read.parquet(f"{wh}/blocks").filter(
-        ~((F.col("column") == "role") & (F.col("chunk_idx") == 0))
-    ).coalesce(1).write.parquet(f"{broken}/blocks")
-    with pytest.raises(Exception, match="missing column blocks|incomplete"):
-        datasource.read_warehouse(spark, broken).count()
+    drop_block(spark, f"{wh}/blocks", f"{broken}/blocks")
+    for read in _READ_PATHS.values():
+        with pytest.raises(Exception, match="heterogeneous chunk schemas"):
+            read(spark, broken, None).count()
+
+
+def test_task_side_guard_on_manifested_warehouse(spark, tmp_path, mwh):
+    """Manifest signatures are per-partition unions, so planning from them
+    cannot see ONE chunk missing a column: the scan task must."""
+    root = str(tmp_path / "mbroken")
+    drop_block(spark, f"{mwh}/blocks", f"{root}/blocks")
+    shutil.copytree(f"{mwh}/manifests", f"{root}/manifests")
+    df = datasource.read_warehouse(spark, root)  # plans from the manifests
+    with pytest.raises(Exception, match="missing column blocks"):
+        df.count()
+
+
+@pytest.mark.parametrize("shape, strict, common, merged", [
+    # (warehouse, full strict read, read of _COMMON, full merge_schemas)
+    ("evolved", "heterogeneous chunk schemas", None, None),
+    ("colliding", "colliding chunk keys", "colliding chunk keys",
+     "colliding chunk keys"),
+    ("type_change", "heterogeneous chunk schemas", None, "two ctypes"),
+    ("incomplete", "heterogeneous chunk schemas", None, None),
+], ids=["evolved", "colliding", "type_change", "incomplete"])
+def test_read_paths_agree(spark, tmp_path, wh, shape, strict, common, merged):
+    """decode_blocks (both feeders), read_warehouse and scan_warehouse
+    raise the same message on one heterogeneous warehouse, or return the
+    same rows (None = rows expected)."""
+    root = str(tmp_path / shape)
+    if shape == "incomplete":
+        drop_block(spark, f"{wh}/blocks", f"{root}/blocks")
+    else:
+        {"evolved": evolved_wh, "colliding": colliding_wh,
+         "type_change": type_change_wh}[shape](spark, root)
+
+    for cols, want in ((None, strict), (_COMMON, common)):
+        got = {name: _outcome(lambda: read(spark, root, cols))
+               for name, read in _READ_PATHS.items()}
+        first = got["decode_blocks"]
+        assert all(g == first for g in got.values()), (cols, got)
+        if want is None:
+            assert isinstance(first, list) and first, (cols, first)
+        else:
+            assert first == want, (cols, first)
+
+    full = _outcome(lambda: decode_blocks(
+        spark.read.parquet(f"{root}/blocks"), merge_schemas=True))
+    narrow = _outcome(lambda: decode_blocks(
+        spark.read.parquet(f"{root}/blocks"), columns=_COMMON,
+        merge_schemas=True))
+    assert narrow == got["decode_blocks"]
+    if merged is None:
+        assert sorted(r[:2] for r in full) == narrow
+    else:
+        assert full == merged
 
 
 def test_negative_zero_predicates_never_drop_rows(spark, tmp_path):
@@ -330,20 +409,29 @@ def mwh(spark, tmp_path_factory):
 
 def test_planning_reads_manifests_not_blocks(spark, mwh, monkeypatch):
     """schema()/load on a manifested warehouse must resolve ctypes from the
-    O(partitions) schema_sig rows — the full blocks-metadata scan (the r3
-    100-TB planning bottleneck) must not run at all."""
+    O(partitions) schema_sig rows — the file feeder (the full
+    blocks-metadata read, the r3 100-TB planning bottleneck) must never
+    run."""
+    from vcf2df_spark import decode
 
-    def boom(_root):
-        raise AssertionError(
-            "planning fell back to the full blocks-metadata scan"
-        )
+    def boom(_files):
+        raise AssertionError("planning fell back to the blocks files")
 
-    monkeypatch.setattr(datasource, "_ctypes_from_blocks", boom)
     want = (
         decode_blocks(spark.read.parquet(f"{mwh}/blocks"))
         .orderBy("conv_id", "turn_idx")
         .collect()
     )
+    monkeypatch.setattr(decode, "file_sigs", boom)
+    # in-process: Spark plans Python sources in a separate worker, where
+    # this monkeypatch does not reach
+    ds = datasource.TranscriptDataSource({"path": mwh})
+    reader = ds.reader(ds.schema())
+    assert reader.ctypes["score"] == "f64"
+    pruned = datasource.PrunedTranscriptDataSource(
+        {"path": mwh, "columns": "conv_id,score"})
+    assert [f.name for f in pruned.schema().fields] == ["conv_id", "score"]
+
     got = (
         datasource.read_warehouse(spark, mwh)
         .orderBy("conv_id", "turn_idx")
@@ -355,26 +443,41 @@ def test_planning_reads_manifests_not_blocks(spark, mwh, monkeypatch):
     assert n == sum(1 for r in want if r.turn_idx >= 2)
 
 
-def test_ctypes_from_manifests_matches_blocks_scan(mwh):
-    sig = datasource._ctypes_from_manifests(mwh)
-    full = datasource._ctypes_from_blocks(f"{mwh}/blocks")
-    assert sig == full
-    assert sig["score"] == "f64" and sig["conv_id"] == "str"
+@pytest.mark.parametrize("requested", [None, ["conv_id", "score", "ts"]],
+                         ids=["all", "requested"])
+def test_feeders_resolve_identical_ctypes(spark, mwh, requested):
+    """Manifests, blocks files and the Spark aggregate feed the one
+    resolver the same warehouse: identical maps, with and without a
+    column restriction."""
+    from vcf2df_spark.decode import (
+        file_sigs, manifest_sigs, resolve_ctypes, spark_sigs,
+    )
+
+    files = datasource._dataset(f"{mwh}/blocks").files
+    blocks = spark.read.parquet(f"{mwh}/blocks")
+    got = [resolve_ctypes(sigs, requested) for sigs in (
+        manifest_sigs(mwh), file_sigs(files), spark_sigs(blocks))]
+    assert got[0] == got[1] == got[2]
+    assert got[0]["conv_id"] == "str" and got[0]["ts"] == "ts"
+    assert got[0]["score"] == "f64"
+    assert len(got[0]) == (11 if requested is None else 3)
 
 
 def test_legacy_manifests_without_sig_fall_back(spark, mwh, tmp_path):
     """Pre-r4 manifests (no schema_sig column) must not break planning —
-    the blocks fallback still resolves the schema."""
+    the blocks files still resolve the schema."""
     import shutil as _sh
+
+    from vcf2df_spark.decode import manifest_sigs
 
     root = str(tmp_path / "legacy")
     _sh.copytree(f"{mwh}/blocks", f"{root}/blocks")
     spark.read.parquet(f"{mwh}/manifests").drop("schema_sig").write.parquet(
         f"{root}/manifests"
     )
-    assert datasource._ctypes_from_manifests(root) is None
-    got = datasource.infer_ctypes(f"{root}/blocks")
-    assert got == datasource._ctypes_from_blocks(f"{root}/blocks")
+    assert manifest_sigs(root) is None
+    assert datasource.infer_ctypes(f"{root}/blocks") == \
+        datasource.infer_ctypes(f"{mwh}/blocks")
 
 
 def test_scan_warehouse_rejects_empty_predicate(spark, mwh):

@@ -11,8 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from vcf2df_spark import fixtures
-from vcf2df_spark.decode import decode_blocks, schema_from_blocks
+from vcf2df_spark.decode import (
+    decode_blocks, resolve_ctypes, schema_from_ctypes, spark_sigs,
+)
 from vcf2df_spark.encode import encode_transcripts, normalize_input
+from warehouses import colliding_wh, no_spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -97,10 +100,11 @@ def test_normalize_types_and_defaults(spark):
     assert out["farr"].tolist() == ["1.50,2.00", ""]
 
 
-def test_schema_from_blocks_matches_decode(spark, extended_roundtrip):
+def test_schema_from_ctypes_matches_decode(spark, extended_roundtrip):
     pdf = fixtures.transcripts_extended(n_convs=50)
     blocks = encode_transcripts(spark.createDataFrame(pdf), num_partitions=4)
-    schema = schema_from_blocks(blocks)
+    schema = schema_from_ctypes(resolve_ctypes(spark_sigs(blocks)))
+    assert schema == decode_blocks(blocks).schema
     names = [f.name for f in schema.fields]
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
     assert names == ["conv_id", "turn_idx", "role", "text", "tool", "ts",
@@ -176,13 +180,10 @@ def test_decode_rejects_heterogeneous_warehouse(spark, tmp_path):
     ext = base.copy()
     ext["score"] = 1.5
 
-    path_a = str(tmp_path / "blocks_a")
-    encode_transcripts(spark.createDataFrame(base), 2).write.mode(
-        "append").parquet(path_a)
-    encode_transcripts(spark.createDataFrame(ext), 2).write.mode(
-        "append").parquet(path_a)
+    path_a = str(tmp_path / "wh_a")
+    colliding_wh(spark, path_a)
     with pytest.raises(Exception, match="colliding chunk keys"):
-        decode_blocks(spark.read.parquet(path_a)).collect()
+        decode_blocks(spark.read.parquet(f"{path_a}/blocks")).collect()
 
     path_b = str(tmp_path / "blocks_b")
     b_base = encode_transcripts(spark.createDataFrame(base), 2)
@@ -194,11 +195,10 @@ def test_decode_rejects_heterogeneous_warehouse(spark, tmp_path):
         decode_blocks(spark.read.parquet(path_b)).collect()
 
 
-def test_fast_schema_path_on_bare_parquet_scan(spark, tmp_path, monkeypatch):
-    """r6: decode_blocks on a BARE parquet scan derives the output schema
-    driver-side (pyarrow over the scan's own files) — no Spark aggregate
-    job — and matches the distributed derivation exactly. Filtered or
-    in-memory lineages must keep the distributed path."""
+def test_fast_schema_path_on_bare_parquet_scan(spark, tmp_path):
+    """decode_blocks on a BARE parquet scan reads the chunk signatures from
+    the scan's own files (pyarrow) — no Spark job before the first action.
+    Filtered or in-memory lineages keep the Spark feeder."""
     import vcf2df_spark.decode as decode_mod
 
     pdf = fixtures.transcripts_extended(n_convs=50)
@@ -207,25 +207,15 @@ def test_fast_schema_path_on_bare_parquet_scan(spark, tmp_path, monkeypatch):
     encode_transcripts(src, num_partitions=4).write.parquet(f"{path}/blocks")
     stored = spark.read.parquet(f"{path}/blocks")
 
-    slow = decode_mod.ctypes_from_blocks(
-        stored.filter(~F.col("column").startswith("__"))
+    assert decode_mod._bare_parquet_files(stored)
+    decoded = no_spark_jobs(spark, lambda: decode_blocks(stored))
+    assert decoded.count() == len(pdf)
+    pruned = no_spark_jobs(
+        spark, lambda: decode_blocks(stored, columns=["conv_id", "score"])
     )
-    fast = decode_mod._ctypes_fast(stored, None, False)
-    assert fast == slow  # identical map, no Spark job needed
+    assert pruned.columns == ["conv_id", "score"]
 
-    # pruned decode: the requested-columns filter is mirrored too
-    fast_pruned = decode_mod._ctypes_fast(stored, ["conv_id", "score"], False)
-    assert fast_pruned == {"conv_id": "str", "score": "f64"}
-
-    # the bench/grouped decode path must not launch the derivation job
-    def boom(*a, **kw):
-        raise AssertionError("distributed schema derivation ran on a bare scan")
-
-    monkeypatch.setattr(decode_mod, "schema_from_blocks", boom)
-    assert decode_blocks(stored).count() == len(pdf)
-
-    # a FILTERED lineage is not a bare scan: fast path declines (the
-    # distributed derivation keeps the heterogeneity guarantee there)
-    assert decode_mod._ctypes_fast(
-        stored.filter(F.col("partition_id") == 0), None, False
+    # a FILTERED lineage is not a bare scan: its files do not describe it
+    assert decode_mod._bare_parquet_files(
+        stored.filter(F.col("partition_id") == 0)
     ) is None

@@ -77,13 +77,39 @@ def test_decode_verify_grouped_uses_manifest_schema(spark, source_path,
                                 "--master", "local[4]"])
     assert rc == 0
 
+    import uuid
+
+    import vcf2df_spark.datasource as datasource_mod
     import vcf2df_spark.decode as decode_mod
+
+    # job group from schema planning (after the blocks scan's own footer
+    # job) through the decoded DataFrame: the status tracker must see no
+    # Spark job in it
+    sc = spark.sparkContext
+    group = f"grouped-plan-{uuid.uuid4().hex}"
+    jobs = []
+    infer, decode = datasource_mod.infer_ctypes, decode_mod.decode_blocks
+
+    def planned(*a, **kw):
+        sc.setJobGroup(group, "must stay empty")
+        return infer(*a, **kw)
+
+    def decoded(*a, **kw):
+        out = decode(*a, **kw)
+        jobs.append(list(sc.statusTracker().getJobIdsForGroup(group)))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        return out
 
     def boom(*a, **kw):
         raise AssertionError("schema derivation ran despite manifests sig")
 
-    monkeypatch.setattr(decode_mod, "schema_from_blocks", boom)
+    monkeypatch.setattr(datasource_mod, "infer_ctypes", planned)
+    monkeypatch.setattr(decode_mod, "decode_blocks", decoded)
+    monkeypatch.setattr(decode_mod, "file_sigs", boom)
+    monkeypatch.setattr(decode_mod, "spark_sigs", boom)
     rc = _run(decode_job.main, ["--warehouse", wh, "--source", source_path,
                                 "--master", "local[4]",
                                 "--reader", "grouped"])
     assert rc == 0
+    assert jobs == [[]]

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from vcf2df_spark import fixtures, scan
 from vcf2df_spark.decode import decode_blocks
 from vcf2df_spark.encode import encode_transcripts
+from warehouses import no_spark_jobs
 
 
 def _warehouse(spark, tmp_path):
@@ -230,23 +231,6 @@ def _job_warehouse(spark, path, src, num_partitions=8, chunk_rows=256):
     return path
 
 
-def _no_spark_jobs(spark, fn):
-    """fn()'s result, asserting it launched no Spark job (the status
-    tracker's job ids for a dedicated job group stay empty)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"no-spark-job-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "must stay empty")
-    try:
-        out = fn()
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out
-
-
 def test_fetch_conversation_hash_routed_partition_pruning(spark, tmp_path):
     """Job-shaped warehouse (hive dirs + manifests): the lookup COMPUTES
     its partition from the manifests' routing metadata (num_partitions +
@@ -263,12 +247,12 @@ def test_fetch_conversation_hash_routed_partition_pruning(spark, tmp_path):
     assert pids is not None and len(pids) == 1
     # the sanity probe sees a job when one runs
     try:
-        _no_spark_jobs(spark, lambda: spark.range(3).count())
+        no_spark_jobs(spark, lambda: spark.range(3).count())
         raised = False
     except AssertionError:
         raised = True
     assert raised
-    got = _no_spark_jobs(
+    got = no_spark_jobs(
         spark, lambda: scan.fetch_conversation(spark, wh, target)
     )
     want = src[src.conv_id == target].sort_values("turn_idx")

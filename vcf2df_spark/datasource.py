@@ -39,7 +39,6 @@ this source is that surface generalized to a queryable, pruned scan.
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import os
 from typing import Any, Iterator, Sequence
 
@@ -59,15 +58,6 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
-_CTYPE_TO_SPARK = {
-    "str": T.StringType(),
-    "i32": T.IntegerType(),
-    "i64": T.LongType(),
-    "ts": T.TimestampType(),
-    "f64": T.DoubleType(),
-    "bool": T.BooleanType(),
-}
-
 
 def _blocks_root(options: dict) -> str:
     path = options.get("path") or options.get("warehouse")
@@ -85,97 +75,34 @@ def _dataset(root: str):
     return pads.dataset(root, format="parquet", partitioning="hive")
 
 
-def _merge_ctype(merged: dict[str, str], col: str, ct: str) -> None:
-    prev = merged.get(col)
-    if prev is not None and prev != ct:
-        raise ValueError(
-            f"conflicting ctypes for column {col!r}: {prev} vs {ct} — "
-            "heterogeneous encodes appended into one warehouse"
-        )
-    merged[col] = ct
+def infer_ctypes(root: str, requested: list[str] | None = None) -> dict[str, str]:
+    """column -> ctype for the warehouse whose blocks live at ``root``,
+    restricted to ``requested`` (loud on unknown columns), by
+    ``decode.resolve_ctypes`` — the same derivation and loud checks as
+    ``decode_blocks``.
 
-
-def _ctypes_from_manifests(warehouse: str) -> dict[str, str] | None:
-    """column -> ctype from the manifests' ``schema_sig`` rows: O(partitions)
-    metadata instead of the full blocks pull — the read-planning analogue of
-    opening ONE Parquet footer (``converter/convert_test.go:63-97``) rather
-    than all of them.
-
-    The manifests are the commit log, so committed ``schema_sig`` rows ARE
-    the warehouse schema. Returns None (caller falls back to the blocks
-    scan) when the signature is unavailable: no manifests dir, pre-r4
-    manifests without the column, or any null signature rows mixed in.
-    """
-    import pyarrow.dataset as pads
-
-    from .decode import _CORE_CTYPES
-
-    try:
-        d = pads.dataset(
-            f"{warehouse}/manifests", format="parquet", partitioning="hive"
-        )
-        if "schema_sig" not in d.schema.names:
-            return None
-        flt = (
-            pads.field("status") == "committed"
-            if "status" in d.schema.names else None
-        )
-        sigs = set(
-            d.to_table(columns=["schema_sig"], filter=flt)
-            .column("schema_sig").to_pylist()
-        )
-    except (FileNotFoundError, OSError):
-        return None
-    if not sigs or None in sigs:
-        return None
-    # distinct signatures (e.g. epochs that added an extra column) union
-    # like the blocks scan would; conflicting ctypes still fail loudly
-    merged: dict[str, str] = {}
-    for sig in sorted(sigs):
-        for col, ct in json.loads(sig).items():
-            _merge_ctype(merged, col, ct or _CORE_CTYPES.get(col, "str"))
-    return merged
-
-
-def infer_ctypes(root: str) -> dict[str, str]:
-    """column -> ctype for the warehouse whose blocks live at ``root``.
-
-    Planning path order: (1) the manifests' per-partition ``schema_sig``
+    Signatures come from (1) the manifests' per-partition ``schema_sig``
     (O(partitions) narrow rows — at the SCALE.md design point that is
     ~400k strings instead of ~50M block-metadata rows pulled through the
-    driver on EVERY ``.load()``); (2) fallback for warehouses without
-    manifests (bench/test block dirs, legacy encodes): the full (column,
-    meta) blocks projection. Per-chunk column-set completeness stays
+    driver on EVERY ``.load()``), else (2) for warehouses without
+    manifests (bench/test block dirs, legacy encodes), the blocks files'
+    per-chunk signatures. Per-chunk column-set completeness stays
     asserted task-side in :meth:`TranscriptReader.read`, where the chunk's
     rows are already in hand.
     """
-    sig = _ctypes_from_manifests(os.path.dirname(root.rstrip("/")))
-    if sig is not None:
-        return sig
-    return _ctypes_from_blocks(root)
+    from . import decode
 
-
-def _ctypes_from_blocks(root: str) -> dict[str, str]:
-    """Fallback planning: one narrow (column, meta) projection over the
-    blocks table, deduplicated driver-side; conflicting ctypes for one
-    column fail loudly."""
-    from .decode import _CORE_CTYPES
-
-    tbl = _dataset(root).to_table(columns=["column", "meta"])
-    ctypes: dict[str, str] = {}
-    seen: set[tuple[str, str]] = set()
-    for col, meta in zip(
-        tbl.column("column").to_pylist(), tbl.column("meta").to_pylist()
-    ):
-        if col.startswith("__"):  # marker rows, never data columns
-            continue
-        key = (col, meta)
-        if key in seen:
-            continue
-        seen.add(key)
-        ct = json.loads(meta).get("ctype") or _CORE_CTYPES.get(col, "str")
-        _merge_ctype(ctypes, col, ct)
-    return ctypes
+    sigs = decode.manifest_sigs(os.path.dirname(root.rstrip("/")))
+    if sigs is None:
+        sigs = decode.file_sigs(_dataset(root).files)
+    if requested is not None:
+        have = {c for sig in sigs for c, _ in sig if not c.startswith("__")}
+        unknown = [c for c in requested if c not in have]
+        if unknown:
+            raise ValueError(
+                f"unknown columns {unknown}; have {decode._column_order(have)}"
+            )
+    return decode.resolve_ctypes(sigs, requested)
 
 
 def _hive_keys(file_path: str, root: str) -> dict[str, int]:
@@ -335,18 +262,11 @@ class TranscriptReader(DataSourceReader):
     every re-plan and keeps the cache consistent.
     """
 
-    def __init__(
-        self,
-        options: dict,
-        schema: T.StructType,
-        ctypes: dict[str, str] | None = None,
-    ):
+    def __init__(self, options: dict, schema: T.StructType,
+                 ctypes: dict[str, str]):
         self.root = _blocks_root(options)
         self.schema = schema
-        # the metadata projection is computed once per load (DataSource
-        # pickles it through to every planning cycle); only a
-        # user-specified-schema load has to infer here
-        self.ctypes = ctypes if ctypes is not None else infer_ctypes(self.root)
+        self.ctypes = ctypes
         self.pushed: list[Filter] = []
 
     def partitions(self) -> Sequence[InputPartition]:
@@ -445,7 +365,7 @@ class TranscriptReader(DataSourceReader):
 
 class PrunedTranscriptReader(TranscriptReader):
     def __init__(self, options: dict, schema: T.StructType,
-                 ctypes: dict[str, str] | None = None):
+                 ctypes: dict[str, str]):
         super().__init__(options, schema, ctypes)
         self.warehouse = (
             options.get("path") or options.get("warehouse")
@@ -544,7 +464,7 @@ class TranscriptStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, options: dict, schema: T.StructType,
-                 ctypes: dict[str, str] | None = None):
+                 ctypes: dict[str, str]):
         self._batch = TranscriptReader(options, schema, ctypes)
         self.warehouse = (options.get("path") or options.get("warehouse")).rstrip("/")
 
@@ -612,34 +532,26 @@ class TranscriptDataSource(DataSource):
         return "transcripts"
 
     def _ctypes(self) -> dict[str, str]:
+        # derived once per load: the DataSource pickles it through to
+        # every planning cycle
         if getattr(self, "_ctypes_cache", None) is None:
-            self._ctypes_cache = infer_ctypes(_blocks_root(self.options))
+            cols = self.options.get("columns")
+            self._ctypes_cache = infer_ctypes(
+                _blocks_root(self.options),
+                [c.strip() for c in cols.split(",")] if cols else None,
+            )
         return self._ctypes_cache
 
     def schema(self) -> T.StructType:
-        from .decode import _column_order
+        from .decode import schema_from_ctypes
 
-        ctypes = self._ctypes()
-        cols = _column_order(ctypes)
-        if self.options.get("columns"):
-            keep = [c.strip() for c in self.options["columns"].split(",")]
-            unknown = [c for c in keep if c not in ctypes]
-            if unknown:
-                raise ValueError(f"unknown columns {unknown}; have {cols}")
-            cols = [c for c in _column_order(keep)]
-        return T.StructType(
-            [T.StructField(c, _CTYPE_TO_SPARK[ctypes[c]], False) for c in cols]
-        )
+        return schema_from_ctypes(self._ctypes())
 
     def reader(self, schema: T.StructType) -> TranscriptReader:
-        return TranscriptReader(
-            self.options, schema, getattr(self, "_ctypes_cache", None)
-        )
+        return TranscriptReader(self.options, schema, self._ctypes())
 
     def streamReader(self, schema: T.StructType) -> TranscriptStreamReader:
-        return TranscriptStreamReader(
-            self.options, schema, getattr(self, "_ctypes_cache", None)
-        )
+        return TranscriptStreamReader(self.options, schema, self._ctypes())
 
 
 class PrunedTranscriptDataSource(TranscriptDataSource):
@@ -653,9 +565,7 @@ class PrunedTranscriptDataSource(TranscriptDataSource):
         return "transcripts_pruned"
 
     def reader(self, schema: T.StructType) -> PrunedTranscriptReader:
-        return PrunedTranscriptReader(
-            self.options, schema, getattr(self, "_ctypes_cache", None)
-        )
+        return PrunedTranscriptReader(self.options, schema, self._ctypes())
 
 
 _registered: set[int] = set()

@@ -9,10 +9,11 @@ column comparison under stable (conv_id, turn_idx) ordering.
 
 Dynamic schema: each block's meta carries ``ctype`` (str/i32/i64/ts/f64/
 bool), so decode rebuilds exactly the columns the table was encoded with —
-core six plus any extras — without a hardcoded column list. The output
-schema is derived from the blocks' own metadata (the Spark analogue of
-reading a Parquet footer) via one tiny driver-side aggregate over the
-pruned (column, meta) projection.
+core six plus any extras — without a hardcoded column list. Every read
+path derives the output schema with ONE function, :func:`resolve_ctypes`,
+over per-chunk (column, ctype) signatures (the analogue of reading a
+Parquet footer); feeders only produce the signatures — from the
+manifests, from the blocks files via pyarrow, or by one Spark aggregate.
 
 Arrow-native like the encode path: string columns are rebuilt directly
 from (utf8 buffer, offsets) with no per-row Python.
@@ -21,6 +22,7 @@ from (utf8 buffer, offsets) with no per-row Python.
 from __future__ import annotations
 
 import json
+from typing import Iterable
 
 import numpy as np
 import pyarrow as pa
@@ -63,11 +65,16 @@ def group_keys(blocks: DataFrame) -> list[str]:
     )
 
 
+def block_ctype(column: str, meta: dict) -> str:
+    """One block's ctype from its parsed meta; legacy blocks have none."""
+    return meta.get("ctype") or _CORE_CTYPES.get(column, "str")
+
+
 def _decode_one(r: dict, n: int) -> pa.Array:
     payload = bytes(r["payload"] or b"")
     aux = bytes(r["aux"] or b"")
     meta = json.loads(r["meta"])
-    ctype = meta.get("ctype") or _CORE_CTYPES.get(r["column"], "str")
+    ctype = block_ctype(r["column"], meta)
     if ctype == "str":
         arr = arrow_ops.decode_string_column(r["codec"], payload, aux, meta, n)
         if pa.types.is_large_string(arr.type):
@@ -145,8 +152,7 @@ def _decode_group_filling(ctypes: dict):
 
 def schema_from_ctypes(ctypes: dict[str, str]):
     """(column -> ctype) map -> the decode output Spark schema (canonical
-    column order, non-nullable). The map typically comes from the
-    manifests' schema_sig (``datasource._ctypes_from_manifests``)."""
+    column order, non-nullable). The map comes from :func:`resolve_ctypes`."""
     from pyspark.sql import types as T
 
     to_spark = {
@@ -159,101 +165,178 @@ def schema_from_ctypes(ctypes: dict[str, str]):
     )
 
 
-def schema_from_blocks(blocks: DataFrame, requested: list[str] | None = None):
-    """Output Spark schema from the blocks' own metadata (footer analogue);
-    see ``ctypes_from_blocks`` for the derivation and its guarantees."""
-    return schema_from_ctypes(ctypes_from_blocks(blocks, requested))
+# ---------------------------------------------------------------------------
+# schema derivation: one resolver over per-chunk signatures, three feeders
+# ---------------------------------------------------------------------------
 
 
-def ctypes_from_blocks(
-    blocks: DataFrame,
+def resolve_ctypes(
+    sigs: Iterable[Iterable[tuple[str, str | None]]],
     requested: list[str] | None = None,
     merge: bool = False,
 ) -> dict[str, str]:
-    """(column -> ctype) map from the blocks' own metadata.
+    """(column -> ctype) map from chunk signatures — THE schema derivation
+    every read path shares (the analogue of reading a Parquet footer).
 
-    One driver-side aggregate over the (column, meta) projection — parquet
-    column pruning keeps this scan narrow; result is O(columns).
+    A signature is one chunk's (column, ctype-or-None) pairs, a column
+    listed twice when two blocks of one column share the chunk's key. Pure
+    function; the feeders below only produce signatures.
 
-    ``requested`` columns missing from the blocks (e.g. a zone-map-pruned
-    scan that matched zero chunks) still get a typed field — core columns
-    from their known types, unknown extras as string — so downstream
-    filters resolve against an empty result instead of failing analysis.
+    ``requested`` restricts every signature to those columns first, so a
+    narrow read of the columns all chunks share works on a warehouse whose
+    extras differ. Requested columns missing from the blocks (e.g. a
+    zone-map-pruned scan that matched zero chunks) still get a typed
+    field — core columns from their known types, unknown extras as
+    string — so downstream filters resolve against an empty result
+    instead of failing analysis.
 
-    ``merge=True`` is additive schema evolution: heterogeneous chunk
-    signatures UNION into one superset schema instead of raising, as long
-    as no column appears with two different ctypes (that still raises —
-    a type change is never guessable). Chunks missing a merged column
-    decode with the typed zero-defaults ``normalize_input`` uses.
+    Loud failures: a column listed twice in one signature (key
+    collision); differing signatures (a second encode appending different
+    extras, legacy pre-ctype blocks mixed with new, a streaming schema
+    change across epochs) unless ``merge``; a column whose ctype differs
+    between signatures even under ``merge`` (a type change is never
+    guessable). ``merge=True`` is additive schema evolution: the
+    signatures UNION into one superset schema, and chunks missing a merged
+    column decode with the typed zero-defaults ``normalize_input`` uses.
     """
-    import pyspark.sql.functions as F
-
-    # one aggregation over the narrow (keys, column, ctype) projection:
-    # every chunk's sorted (column, ctype) signature, deduplicated. A
-    # heterogeneous warehouse (a second encode appending different extras,
-    # legacy pre-ctype blocks mixed with new, a streaming schema change
-    # across epochs) fails LOUDLY here instead of decoding other chunks
-    # against one sampled chunk's schema (ADVICE r2). Cost is O(chunks)
-    # metadata rows — parquet column pruning keeps the scan narrow.
-    per_chunk = (
-        blocks.select(
-            *group_keys(blocks), "column",
-            F.get_json_object("meta", "$.ctype").alias("ctype"),
-        )
-        .groupBy(*group_keys(blocks))
-        .agg(
-            F.sort_array(F.collect_list(F.struct("column", "ctype"))).alias("sig"),
-            (F.count("*") > F.count_distinct("column")).alias("collided"),
-        )
-    )
-    sigs = per_chunk.select("sig", "collided").distinct().collect()
-    if any(r["collided"] for r in sigs):
+    keep = None if requested is None else set(requested)
+    distinct = set()
+    for sig in sigs:
+        s = tuple(sorted(
+            ((c, ct) for c, ct in sig
+             if not c.startswith("__") and (keep is None or c in keep)),
+            key=lambda e: (e[0], e[1] or ""),
+        ))
+        if s:
+            distinct.add(s)
+    if any(len(s) > len({c for c, _ in s}) for s in distinct):
         raise ValueError(
             "colliding chunk keys: multiple blocks for one column share a "
             "(partition_id, chunk_idx[, epoch]) group — two encode jobs "
             "appended into one blocks dir without distinct partition dirs; "
             "decode refuses to fuse them"
         )
-    if len(sigs) > 1 and not merge:
-        rendered = sorted(
-            str([(e["column"], e["ctype"]) for e in s["sig"]]) for s in sigs
-        )
+    if len(distinct) > 1 and not merge:
+        rendered = sorted(str(list(s)) for s in distinct)
         raise ValueError(
-            f"heterogeneous chunk schemas in warehouse ({len(sigs)} distinct "
-            "column/ctype sets) — decode refuses to guess; re-encode to one "
-            "schema (jobs/compact.py --merge-schemas unifies additive "
-            "evolution) or decode subsets. Signatures: " + "; ".join(rendered)
+            f"heterogeneous chunk schemas in warehouse ({len(distinct)} "
+            "distinct column/ctype sets) — decode refuses to guess; "
+            "re-encode to one schema (jobs/compact.py --merge-schemas "
+            "unifies additive evolution) or decode subsets. Signatures: "
+            + "; ".join(rendered)
         )
+    if not distinct:  # zero matching blocks: typed empty result
+        distinct = {tuple((c, None) for c in requested or TRANSCRIPT_COLUMNS)}
     ctypes: dict[str, str] = {}
-    for s in sigs:
-        for e in s["sig"]:
-            ct = e["ctype"] or _CORE_CTYPES.get(e["column"], "str")
-            prev = ctypes.setdefault(e["column"], ct)
+    for s in sorted(distinct, key=str):
+        for c, ct0 in s:
+            # legacy blocks (written before ctype landed): core types
+            ct = ct0 or _CORE_CTYPES.get(c, "str")
+            prev = ctypes.setdefault(c, ct)
             if prev != ct:
                 raise ValueError(
-                    f"column '{e['column']}' appears with two ctypes "
-                    f"({prev} vs {ct}) across chunks — a type CHANGE is "
-                    "never merged; re-encode the offending batch"
+                    f"column '{c}' appears with two ctypes ({prev} vs {ct}) "
+                    "across chunks — a type CHANGE is never merged; "
+                    "re-encode the offending batch"
                 )
-    if not ctypes:  # zero matching blocks: typed empty result
-        for c in requested or TRANSCRIPT_COLUMNS:
-            ctypes[c] = _CORE_CTYPES.get(c, "str")
     return ctypes
 
 
-# the driver-side schema fast lane only engages on small metadata sets;
-# past these caps the distributed derivation (one narrow Spark aggregate)
-# is the right tool — opening 400k footers on the driver is the anti-move
+def manifest_sigs(warehouse: str) -> list[list[tuple]] | None:
+    """Feeder: one signature per committed partition, from the manifests'
+    ``schema_sig`` — O(partitions) rows instead of the blocks metadata.
+    None when that is unavailable (no manifests, manifests without the
+    column, any null signature). A partition's signature is the union of
+    its chunks', so a single chunk missing a column stays a task-side
+    check (``datasource.TranscriptReader.read``)."""
+    from .manifest import read_manifests
+
+    t = read_manifests(warehouse, ("status", "schema_sig"))
+    if t is None or "schema_sig" not in t.column_names:
+        return None
+    sigs = {
+        r["schema_sig"] for r in t.to_pylist()
+        if r.get("status", "committed") == "committed"
+    }
+    if not sigs or None in sigs:
+        return None
+    return [list(json.loads(s).items()) for s in sigs]
+
+
+def file_sigs(files: list[str]) -> list[list[tuple]]:
+    """Feeder: per-chunk signatures read with pyarrow from blocks parquet
+    files' (keys, column, meta) columns — driver-side, no Spark job. Hive
+    keys (partition_id / epoch) come from the path where the file lacks
+    them; a chunk's key spans files, so collisions across appends show."""
+    import pyarrow.parquet as pq
+
+    ctype_of: dict[str, str | None] = {}  # meta json -> ctype
+    per_chunk: dict[tuple, list[tuple]] = {}
+    for f in files:
+        hive = {}
+        for seg in f.split("/")[:-1]:
+            k, eq, v = seg.partition("=")
+            if eq and k in ("partition_id", "epoch"):
+                hive[k] = int(v)
+        pf = pq.ParquetFile(f)
+        names = set(pf.schema_arrow.names)
+        t = pf.read(columns=[
+            c for c in ("partition_id", "chunk_idx", "epoch", "column", "meta")
+            if c in names
+        ]).to_pydict()
+        n = len(t["column"])
+        pids = t.get("partition_id") or [hive.get("partition_id")] * n
+        epochs = t.get("epoch") or [hive.get("epoch")] * n
+        for pid, chunk, epoch, col, meta in zip(
+            pids, t["chunk_idx"], epochs, t["column"], t["meta"]
+        ):
+            if meta not in ctype_of:
+                ctype_of[meta] = json.loads(meta).get("ctype")
+            per_chunk.setdefault((pid, chunk, epoch), []).append(
+                (col, ctype_of[meta])
+            )
+    return list(per_chunk.values())
+
+
+def spark_sigs(blocks: DataFrame) -> list[list[tuple]]:
+    """Feeder for any other lineage: one Spark aggregate over the narrow
+    (keys, column, ctype) projection — every chunk's sorted signature,
+    deduplicated, so the driver receives one row per DISTINCT signature
+    (parquet column pruning keeps the scan narrow)."""
+    import pyspark.sql.functions as F
+
+    keys = group_keys(blocks)
+    rows = (
+        blocks.select(
+            *keys, "column",
+            F.get_json_object("meta", "$.ctype").alias("ctype"),
+        )
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(F.struct("column", "ctype")))
+             .alias("sig"))
+        .select("sig").distinct().collect()
+    )
+    return [[(e["column"], e["ctype"]) for e in r["sig"]] for r in rows]
+
+
+# the driver-side file feeder only serves decode on small metadata sets;
+# past these caps one narrow Spark aggregate is the right tool — opening
+# 400k footers on the driver is the anti-move
 _FAST_SCHEMA_MAX_FILES = 256
 _FAST_SCHEMA_MAX_ROWS = 1_000_000
 
 
 def _bare_parquet_files(df: DataFrame) -> list[str] | None:
-    """Local parquet file paths when ``df`` is a BARE parquet scan — an
-    analyzed plan that is exactly one LogicalRelation, no filters or
-    projections. Only such a plan is safe to mirror driver-side: any other
-    lineage (pruning joins, in-memory encode output, unions) must keep the
-    distributed schema derivation. Returns None on any doubt."""
+    """Local parquet file paths when ``df`` is a BARE blocks parquet scan —
+    an analyzed plan that is exactly one LogicalRelation, no filters or
+    projections — within the file and row caps. Only such a plan's
+    signatures can be read from its files: any other lineage (pruning
+    joins, in-memory encode output, unions) keeps the Spark feeder.
+    Returns None on any doubt."""
+    import pyarrow.parquet as pq
+
+    if not {"partition_id", "chunk_idx", "column", "meta"} <= set(df.columns):
+        return None
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRelation":
@@ -264,125 +347,13 @@ def _bare_parquet_files(df: DataFrame) -> list[str] | None:
             f[len("file:"):] if f.startswith("file:") else f
             for f in df.inputFiles()
         ]
-        if not files or any("://" in f for f in files):
-            return None  # remote URIs: keep the distributed path
-        return files
+        if (not files or len(files) > _FAST_SCHEMA_MAX_FILES
+                or any("://" in f for f in files)):
+            return None  # none, too many, or remote URIs
+        rows = sum(pq.read_metadata(f).num_rows for f in files)
+        return files if rows <= _FAST_SCHEMA_MAX_ROWS else None
     except Exception:
         return None
-
-
-def _ctypes_fast(
-    raw_blocks: DataFrame,
-    requested: list[str] | None,
-    merge: bool,
-) -> dict[str, str] | None:
-    """Driver-side mirror of :func:`ctypes_from_blocks` for bare parquet
-    scans: the schema-derivation aggregate is O(block-metadata rows), and
-    below the caps reading (keys, column, meta) straight from the parquet
-    footprint costs milliseconds where the Spark job costs a full
-    scheduling round-trip PER DECODE (measured ~0.45 s of the 0.83 s
-    decode phase at sf0.1 — r6 guide §1/§5: driver O(metadata) work).
-
-    Same signature semantics, same loud failures (identical messages) for
-    collisions / heterogeneous schemas / type changes. Returns None
-    whenever the fast lane cannot PROVE equivalence (non-bare plan, caps
-    exceeded, unreadable files) — the caller then runs the Spark path.
-    """
-    import pyarrow.parquet as pq
-
-    cols_avail = set(raw_blocks.columns)
-    if not {"partition_id", "chunk_idx", "column", "meta"} <= cols_avail:
-        return None
-    files = _bare_parquet_files(raw_blocks)
-    if files is None or len(files) > _FAST_SCHEMA_MAX_FILES:
-        return None
-    has_epoch = "epoch" in cols_avail
-    key_cols = ["partition_id", "chunk_idx"] + (["epoch"] if has_epoch else [])
-    want = key_cols + ["column", "meta"]
-    frames: list[dict] = []
-    total = 0
-    try:
-        for f in files:
-            pf = pq.ParquetFile(f)
-            total += pf.metadata.num_rows
-            if total > _FAST_SCHEMA_MAX_ROWS:
-                return None
-            phys = set(pf.schema_arrow.names)
-            t = pf.read(columns=[c for c in want if c in phys])
-            d = {c: t.column(c).to_pylist() for c in t.schema.names}
-            # hive-partitioned keys (partition_id / epoch) live in the path
-            hive: dict[str, int] = {}
-            for seg in f.split("/")[:-1]:
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    if k in ("partition_id", "epoch"):
-                        hive[k] = int(v)
-            for k in key_cols:
-                if k not in d:
-                    if k not in hive:
-                        return None  # key neither physical nor in the path
-                    d[k] = [hive[k]] * t.num_rows
-            frames.append(d)
-    except Exception:
-        return None
-
-    keep = requested if requested is None else set(requested)
-    meta_ctype: dict[str, str | None] = {}
-    per_chunk: dict[tuple, list[tuple[str, str | None]]] = {}
-    collided: set[tuple] = set()
-    for d in frames:
-        for i, col in enumerate(d["column"]):
-            if col.startswith("__"):
-                continue
-            if keep is not None and col not in keep:
-                continue
-            m = d["meta"][i]
-            if m not in meta_ctype:
-                try:
-                    meta_ctype[m] = json.loads(m).get("ctype")
-                except Exception:
-                    return None
-            key = tuple(d[k][i] for k in key_cols)
-            per_chunk.setdefault(key, []).append((col, meta_ctype[m]))
-    sigs: list[tuple[tuple[str, str | None], ...]] = []
-    seen_sigs: set = set()
-    for key, entries in per_chunk.items():
-        if len(entries) > len({c for c, _ in entries}):
-            collided.add(key)
-        sig = tuple(sorted(entries, key=lambda e: (e[0], e[1] or "")))
-        if sig not in seen_sigs:
-            seen_sigs.add(sig)
-            sigs.append(sig)
-    if collided:
-        raise ValueError(
-            "colliding chunk keys: multiple blocks for one column share a "
-            "(partition_id, chunk_idx[, epoch]) group — two encode jobs "
-            "appended into one blocks dir without distinct partition dirs; "
-            "decode refuses to fuse them"
-        )
-    if len(sigs) > 1 and not merge:
-        rendered = sorted(str([(c, ct) for c, ct in s]) for s in sigs)
-        raise ValueError(
-            f"heterogeneous chunk schemas in warehouse ({len(sigs)} distinct "
-            "column/ctype sets) — decode refuses to guess; re-encode to one "
-            "schema (jobs/compact.py --merge-schemas unifies additive "
-            "evolution) or decode subsets. Signatures: " + "; ".join(rendered)
-        )
-    ctypes: dict[str, str] = {}
-    for s in sigs:
-        for col, ct0 in s:
-            ct = ct0 or _CORE_CTYPES.get(col, "str")
-            prev = ctypes.setdefault(col, ct)
-            if prev != ct:
-                raise ValueError(
-                    f"column '{col}' appears with two ctypes "
-                    f"({prev} vs {ct}) across chunks — a type CHANGE is "
-                    "never merged; re-encode the offending batch"
-                )
-    if not ctypes:  # zero matching blocks: typed empty result
-        for c in requested or TRANSCRIPT_COLUMNS:
-            ctypes[c] = _CORE_CTYPES.get(c, "str")
-    return ctypes
 
 
 def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
@@ -394,20 +365,18 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     (analogue of ReadSchema pruning at a parquet scan, but over our own
     encoded blocks).
 
-    ``out_schema`` skips the metadata-derivation aggregate when the caller
-    already holds the warehouse schema (e.g. from the manifests'
-    ``schema_sig`` via ``datasource.infer_ctypes``, or across repeated
-    decodes of one warehouse) — the derivation is one extra Spark job per
-    call, pure overhead when the schema is already known. Callers passing
-    it take over the heterogeneity guarantee ``schema_from_blocks``
-    enforces (manifest signatures carry the same check).
+    ``out_schema`` skips the schema derivation when the caller already
+    holds the warehouse schema (e.g. ``datasource.infer_ctypes`` from the
+    manifests, or across repeated decodes of one warehouse). Otherwise the
+    blocks' own signatures resolve it (:func:`resolve_ctypes`): read from
+    the files of a bare parquet scan, or by one Spark aggregate.
 
     ``merge_schemas`` opts into additive schema evolution: heterogeneous
     chunk signatures decode against their UNION schema, with typed
-    zero-defaults for chunks written before a column existed (see
-    ``ctypes_from_blocks``). The strict default stays the loud failure —
-    evolution is a deliberate maintenance action (jobs/compact.py
-    --merge-schemas), not something a read should silently paper over.
+    zero-defaults for chunks written before a column existed. The strict
+    default stays the loud failure — evolution is a deliberate maintenance
+    action (jobs/compact.py --merge-schemas), not something a read should
+    silently paper over.
     """
     import pyspark.sql.functions as F
 
@@ -415,19 +384,12 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
     blocks = blocks.filter(~F.col("column").startswith("__"))  # markers
     if columns is not None:
         blocks = blocks.filter(F.col("column").isin(list(columns)))
-    if merge_schemas:
-        ctypes = _ctypes_fast(raw, columns, merge=True)
-        if ctypes is None:
-            ctypes = ctypes_from_blocks(blocks, requested=columns, merge=True)
-        return blocks.groupBy(*group_keys(blocks)).applyInArrow(
-            _decode_group_filling(ctypes), schema_from_ctypes(ctypes)
-        )
-    if out_schema is None:
-        ctypes = _ctypes_fast(raw, columns, merge=False)
-        out_schema = (
-            schema_from_ctypes(ctypes) if ctypes is not None
-            else schema_from_blocks(blocks, requested=columns)
-        )
-    return blocks.groupBy(*group_keys(blocks)).applyInArrow(
-        _decode_group, out_schema
-    )
+    fn = _decode_group
+    if out_schema is None or merge_schemas:
+        files = _bare_parquet_files(raw)
+        sigs = file_sigs(files) if files is not None else spark_sigs(blocks)
+        ctypes = resolve_ctypes(sigs, columns, merge_schemas)
+        out_schema = schema_from_ctypes(ctypes)
+        if merge_schemas:
+            fn = _decode_group_filling(ctypes)
+    return blocks.groupBy(*group_keys(blocks)).applyInArrow(fn, out_schema)

@@ -151,9 +151,9 @@ def build_manifests(
                 ).otherwise(0)
             ).alias("_turn_stat_nulls"),
             # per-partition (column -> ctype) signature: O(partitions)
-            # read planning (datasource._ctypes_from_manifests) instead of
-            # the full blocks-metadata pull; null ctype entries are legacy
-            # blocks whose type the reader resolves from _CORE_CTYPES
+            # read planning (decode.manifest_sigs) instead of the full
+            # blocks-metadata pull; null ctype entries are legacy blocks
+            # whose type decode.resolve_ctypes fills in
             F.to_json(
                 F.map_from_entries(
                     F.array_sort(
@@ -207,6 +207,22 @@ def build_manifests(
         F.lit(shard_dirs).cast("int").alias("shard_dirs"),
         "schema_sig",
     )
+
+
+def read_manifests(warehouse: str, columns):
+    """The manifests table's columns among ``columns`` that exist (hive
+    keys such as ``epoch`` included) as a pyarrow Table, or None when
+    ``{warehouse}/manifests`` is missing or unreadable. One driver-side
+    read, no Spark job; callers check which columns came back."""
+    import pyarrow.dataset as pads
+
+    try:
+        d = pads.dataset(
+            f"{warehouse}/manifests", format="parquet", partitioning="hive"
+        )
+        return d.to_table(columns=[c for c in columns if c in d.schema.names])
+    except (FileNotFoundError, OSError):
+        return None
 
 
 def committed_partitions(spark: SparkSession, manifests_path: str, job_id: str) -> DataFrame:

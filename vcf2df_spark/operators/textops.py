@@ -674,9 +674,9 @@ def q_dup_clusters(spark, sf_dir):
                            "converge within 20 rounds (graph diameter > 20)")
     # isolated docs rejoin as their own singleton labels — the exact
     # value the full-corpus fixpoint assigned them. Anti-join against the
-    # CACHED final labels (same doc_id set as `touched`, but touched's
-    # lineage goes through the just-unpersisted und — using it here would
-    # re-run the whole LSH pipeline when the caller finally acts).
+    # final labels (same doc_id set as `touched`): they come from
+    # localCheckpoint(), a plan leaf, while `touched` would re-run its
+    # distinct over `und` when the caller finally acts.
     isolated = docs.join(labels.select("doc_id"), "doc_id", "left_anti")\
         .select("doc_id", F.col("doc_id").alias("label"))
     return labels.unionByName(isolated).groupBy(

@@ -144,26 +144,21 @@ class Router:
     """
 
     def __init__(self, warehouse: str):
-        import pyarrow.dataset as pads
+        from .manifest import read_manifests
 
         self.root = f"{warehouse}/blocks"
         self.num_partitions = None  # the one modulus over ALL rows, if one
         self.shard_dirs = None
         self.has_epoch = False
         self._rows: list[dict] = []  # committed rows; [] = cannot route
-        try:
-            d = pads.dataset(
-                f"{warehouse}/manifests", format="parquet", partitioning="hive"
-            )
-            names = d.schema.names
-            rows = d.to_table(columns=[
-                c for c in ("partition_id", "status", "conv_min", "conv_max",
-                            "num_partitions", "turn_min", "turn_max",
-                            "shard_dirs")
-                if c in names
-            ]).to_pylist()
-        except (FileNotFoundError, OSError):
+        t = read_manifests(warehouse, (
+            "partition_id", "status", "conv_min", "conv_max",
+            "num_partitions", "turn_min", "turn_max", "shard_dirs", "epoch",
+        ))
+        if t is None:
             return
+        names = t.column_names
+        rows = t.to_pylist()
         self.has_epoch = "epoch" in names
         mods = {r.get("num_partitions") for r in rows}
         if len(mods) == 1:
@@ -355,7 +350,7 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
     import pyarrow.dataset as pads
 
     from . import codecs
-    from .decode import _CORE_CTYPES, _column_order
+    from .decode import _column_order, block_ctype
 
     # routing first: with hash metadata the lookup opens EXACTLY the routed
     # partition dirs; without it, one hive-discovered dataset over the tree
@@ -407,7 +402,7 @@ def fetch_conversation(spark: SparkSession, warehouse: str, conv_id: str):
                 continue
             r = cols[col]
             meta = json.loads(r["meta"])
-            ctype = meta.get("ctype") or _CORE_CTYPES.get(col, "str")
+            ctype = block_ctype(col, meta)
             if ctype == "str":
                 out[col] = _decode_str_row(r, n, lo, hi).to_pylist()
                 continue
